@@ -39,12 +39,16 @@ def flatten_struct(df: DataFrame, struct_col: str, fields: dict[str, str]) -> Da
     return df.select(*others, *cols)
 
 
-def multi_column_search(df: DataFrame, query: str, columns: list[str]) -> DataFrame:
-    """P7: OR-chained case-insensitive substring search across columns
-    (A5:102-111 ``ILIKE '%q%'`` over name/email/phone/rfid)."""
+def search_predicate(query: str, columns: list[str]) -> Column:
+    """P7's predicate: ``query`` as a case-insensitive substring of any of
+    ``columns`` (A5:102-111 ``ILIKE '%q%'`` over name/email/phone/rfid)."""
     pat = f"%{query}%"
-    cond = reduce(lambda a, b: a | b, [F.col(c).ilike(pat) for c in columns])
-    return df.filter(cond)
+    return reduce(lambda a, b: a | b, [F.col(c).ilike(pat) for c in columns])
+
+
+def multi_column_search(df: DataFrame, query: str, columns: list[str]) -> DataFrame:
+    """P7: OR-chained case-insensitive substring search across columns."""
+    return df.filter(search_predicate(query, columns))
 
 
 def select_columns(df: DataFrame, columns: list[str]) -> DataFrame:

@@ -45,7 +45,8 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     The parsed frame is cached first: Spark refuses plans over raw JSON that
     prune to only the corrupt column (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and
-    the ingest batch is re-read by both branches anyway.
+    the ingest batch is re-read by both branches anyway. The caller releases
+    it with ``df.unpersist()`` once both are consumed.
     """
     if CORRUPT_COL not in df.columns:
         return df, df.limit(0)

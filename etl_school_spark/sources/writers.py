@@ -52,13 +52,19 @@ def copy_into(
     files = sorted(glob.glob(os.path.join(stage_dir, pat)))
     staged = read_stage(spark, stage_dir, schema, fmt=fmt, pattern=pattern)
     good, bad = split_corrupt(staged) if fmt == "json" else (staged, None)
-    n = good.count()
-    if n:
-        write_parquet(good, target_dir)
-    n_bad = 0
-    if bad is not None and not bad.isEmpty():
-        n_bad = bad.count()
-        bad.write.mode("append").json(target_dir + "__rejects")
+    try:
+        n = good.count()
+        if n:
+            write_parquet(good, target_dir)
+        n_bad = 0
+        if bad is not None and not bad.isEmpty():
+            n_bad = bad.count()
+            bad.write.mode("append").json(target_dir + "__rejects")
+    finally:
+        # split_corrupt cached the parse, and the cache matches plans by
+        # path: left in place, the next load from this stage dir and schema
+        # would be served this batch again instead of the new files
+        staged.unpersist()
     if history_dir:
         row = (
             target_dir,

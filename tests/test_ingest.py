@@ -11,10 +11,10 @@ from pyspark.sql import functions as F
 from etl_school_spark.schemas import CLIENT_BUY_ORDERS
 
 
-def _write_orders_json(spark, path, n=25, corrupt=0):
+def _write_orders_json(spark, path, n=25, corrupt=0, seed=42):
     from etl_school_spark.sources.generator import gen_buy_orders
 
-    rows = gen_buy_orders(spark, n).collect()
+    rows = gen_buy_orders(spark, n, seed=seed).collect()
     with open(path, "w") as fh:
         for r in rows:
             d = r.asDict(recursive=True)
@@ -69,6 +69,30 @@ def test_copy_into_appends_and_purges(spark, tmp_path):
     # idempotent re-run: stage is empty, nothing loads
     assert copy_into(spark, stage, target, CLIENT_BUY_ORDERS, pattern="batch_*.json") == 0
     assert spark.read.parquet(target).count() == 15
+
+
+def test_copy_into_twice_from_one_stage_dir(spark, tmp_path):
+    """A second load from the same stage dir and schema reads its own files,
+    not the parse the first load cached."""
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from etl_school_spark.sources.readers import CORRUPT_COL
+    from etl_school_spark.sources.writers import copy_into
+
+    schema = StructType(list(CLIENT_BUY_ORDERS.fields) + [StructField(CORRUPT_COL, StringType())])
+    stage, target = str(tmp_path / "stage"), str(tmp_path / "table")
+    os.makedirs(stage)
+    batches = []
+    for i, n in enumerate((12, 7)):
+        p = os.path.join(stage, f"batch_{i}.json")
+        _write_orders_json(spark, p, n=n, corrupt=1, seed=i)
+        with open(p) as fh:
+            batches.append([ln for ln in fh if ln.startswith('{"')])
+        assert copy_into(spark, stage, target, schema) == n
+    want = sorted(json.loads(ln)["txid"] for b in batches for ln in b)
+    assert sorted(r.txid for r in spark.read.parquet(target).select("txid").collect()) == want
+    assert len(set(want)) == len(want)  # the batches share no txid
+    assert spark.read.json(target + "__rejects").count() == 2
 
 
 def test_generator_deterministic_and_dimensional(spark):
