@@ -2,21 +2,33 @@
 
 The reference schedules Snowflake tasks with AFTER-dependencies and reads
 task_history/copy_history for monitoring (A4:364-368, 506-617, 692-728).
-Here: a driver-side scheduler that topologically orders job functions,
-honors conditional skips (a job returning 0 rows marks SKIPPED — the
-``when system$stream_has_data`` analog), fans in multiple parents, and
-appends one audit row per run to a parquet ``task_history`` table the
-engine's own queries can then analyze (A12-style span rollups).
+Here: a driver-side scheduler that starts each job function on its own
+driver thread as soon as its parents finish, honors conditional skips (a
+job returning 0 rows marks SKIPPED — the ``when system$stream_has_data``
+analog), fans in multiple parents, and appends one audit row per task to a
+parquet ``task_history`` table the engine's own queries can then analyze
+(A12-style span rollups). As in a Snowflake task graph, tasks with no
+``after`` path between them may run at the same time, so every task must
+declare each task whose output it reads.
 """
 
 from __future__ import annotations
 
 import time
 import traceback
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
+
+from etl_school_spark.session import local_frame
+
+AUDIT_SCHEMA = (
+    "run_id string, task_name string, state string, scheduled_time double, "
+    "completed_time double, rows_processed long, error string"
+)
 
 
 @dataclass
@@ -42,37 +54,48 @@ class TaskDag:
 
     # -- execution --------------------------------------------------------
     def run(self, run_id: str | None = None) -> dict[str, str]:
-        """Execute all tasks in topological order (fan-out/fan-in safe).
+        """Execute all tasks, each as soon as its parents have finished
+        (fan-out/fan-in safe).
 
-        A failed task marks its descendants UPSTREAM_FAILED (they do not
-        run) — the reference's suspended-dependents behavior. Returns
-        {task: status}.
+        Ready tasks run concurrently on driver threads that inherit the
+        caller's job group and local properties, so tasks with no ``after``
+        path between them may overlap: a task must declare every task whose
+        output it reads. A failed task marks its descendants
+        UPSTREAM_FAILED (they do not run) — the reference's
+        suspended-dependents behavior — while independent branches go on.
+        Returns {task: status}.
         """
         run_id = run_id or f"run_{time.time_ns()}"
-        order = list(TopologicalSorter({n: set(t.after) for n, t in self.tasks.items()}).static_order())
+        graph = TopologicalSorter({n: set(t.after) for n, t in self.tasks.items()})
+        graph.prepare()
         status: dict[str, str] = {}
         audit_rows = []
-        for name in order:
-            task = self.tasks[name]
-            if any(status.get(p) in ("FAILED", "UPSTREAM_FAILED") for p in task.after):
-                status[name] = "UPSTREAM_FAILED"
-                audit_rows.append((run_id, name, "UPSTREAM_FAILED", time.time(), time.time(), 0, None))
-                continue
-            t0 = time.time()
-            try:
-                n = task.fn(self.spark)
-                n = int(n or 0)
-                status[name] = "SUCCEEDED" if n > 0 else "SKIPPED"
-                audit_rows.append((run_id, name, status[name], t0, time.time(), n, None))
-            except Exception:
-                status[name] = "FAILED"
-                audit_rows.append((run_id, name, "FAILED", t0, time.time(), 0, traceback.format_exc()[-2000:]))
-        audit = self.spark.createDataFrame(
-            audit_rows,
-            "run_id string, task_name string, state string, scheduled_time double, "
-            "completed_time double, rows_processed long, error string",
+        running = {}
+        with ThreadPoolExecutor(max_workers=max(1, len(self.tasks)), thread_name_prefix="dag") as pool:
+            while graph.is_active():
+                for name in graph.get_ready():
+                    task = self.tasks[name]
+                    if any(status[p] in ("FAILED", "UPSTREAM_FAILED") for p in task.after):
+                        status[name] = "UPSTREAM_FAILED"
+                        audit_rows.append((run_id, name, "UPSTREAM_FAILED", time.time(), time.time(), 0, None))
+                        graph.done(name)
+                        continue
+                    # wrapped here, on the caller's thread: the wrapper copies
+                    # the local properties (job group, pool, tags) it has now
+                    fn = inheritable_thread_target(self.spark)(_run_task)
+                    running[pool.submit(fn, task, self.spark)] = name
+                if not running:
+                    continue  # only UPSTREAM_FAILED marks: new tasks may be ready
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in finished:
+                    name = running.pop(fut)
+                    state, t0, t1, n, err = fut.result()
+                    status[name] = state
+                    audit_rows.append((run_id, name, state, t0, t1, n, err))
+                    graph.done(name)
+        local_frame(self.spark, audit_rows, AUDIT_SCHEMA).coalesce(1).write.mode("append").parquet(
+            self.history_dir
         )
-        audit.coalesce(1).write.mode("append").parquet(self.history_dir)
         return status
 
     # -- monitoring (T7) --------------------------------------------------
@@ -101,6 +124,16 @@ class TaskDag:
             F.max("completed_time").alias("completed"),
             (F.max("completed_time") - F.min("scheduled_time")).alias("span_sec"),
         )
+
+
+def _run_task(task: Task, spark: SparkSession) -> tuple:
+    """Run one task; returns (state, started, completed, rows, error)."""
+    t0 = time.time()
+    try:
+        n = int(task.fn(spark) or 0)
+    except Exception:
+        return "FAILED", t0, time.time(), 0, traceback.format_exc()[-2000:]
+    return ("SUCCEEDED" if n > 0 else "SKIPPED"), t0, time.time(), n, None
 
 
 def retention_sweep(

@@ -14,6 +14,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_school_spark.session import local_frame
+
 
 @dataclass
 class DqRule:
@@ -58,8 +60,10 @@ def run_dq(
     group: str = "dq",
 ) -> DataFrame:
     """G2 RUN_DQ: compute metrics, optionally append to the metrics table,
-    return the metric rows."""
+    return the metric rows. The suite is aggregated once: the returned
+    frame holds the collected rows, so reading it runs no second pass."""
     m = dq_metrics(df, rules, group)
+    m = local_frame(spark, m.collect(), m.schema)
     if metrics_dir:
         m.coalesce(1).write.mode("append").parquet(metrics_dir)
     return m
@@ -131,8 +135,8 @@ def streaming_dq(
 def dq_alerts(spark: SparkSession, metrics: DataFrame, rules: list[DqRule]) -> DataFrame:
     """G7: join latest metrics against thresholds, emit breach rows
     (A4:874-919)."""
-    thresholds = spark.createDataFrame(
-        [(r.name, float(r.threshold)) for r in rules], "metric_name string, threshold double"
+    thresholds = local_frame(
+        spark, [(r.name, float(r.threshold)) for r in rules], "metric_name string, threshold double"
     )
     latest = latest_metrics(metrics)
     return (

@@ -17,7 +17,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -65,3 +66,27 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A small driver-side frame (audit rows, thresholds, collected
+    metrics) built through Arrow.
+
+    ``spark.createDataFrame(<python list>)`` parallelizes the rows, so every
+    job over the frame starts a Python worker to read them back. An Arrow
+    table instead plans as a JVM ``LocalRelation``: writing a few audit
+    rows costs one short JVM job. ``rows`` are tuples (or ``Row``s) in
+    ``schema`` order, of flat atomic types; ``timestamp_ntz`` columns take
+    naive datetimes.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)

@@ -16,9 +16,10 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
-from etl_school_spark.sources.readers import read_stage, split_corrupt
+from etl_school_spark.session import local_frame
+from etl_school_spark.sources.readers import CORRUPT_COL, read_stage, split_corrupt
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "append") -> None:
@@ -41,8 +42,10 @@ def copy_into(
 ) -> int:
     """S8/S11: load staged files into the target table dir, then purge.
 
-    Returns the number of rows loaded. Corrupt rows are diverted to
-    ``<target_dir>__rejects`` rather than failing the load. With
+    Returns the number of rows loaded. JSON is always parsed with the
+    ``_corrupt_record`` capture column (added when ``schema`` lacks it), so
+    unparseable lines are diverted to ``<target_dir>__rejects`` rather than
+    failing the load or loading as all-NULL rows. With
     ``history_dir`` set, appends one audit row per load — the
     ``copy_history`` analog (A4:390-398, 706-712) the monitoring queries
     aggregate (files, rows good/rejected, bytes, duration).
@@ -50,15 +53,23 @@ def copy_into(
     t0 = time.time()
     pat = pattern or "*"
     files = sorted(glob.glob(os.path.join(stage_dir, pat)))
+    if fmt == "json" and CORRUPT_COL not in schema.fieldNames():
+        # without the capture column an unparseable line loads as an
+        # all-NULL row instead of going to the rejects dir
+        schema = StructType(list(schema.fields) + [StructField(CORRUPT_COL, StringType())])
     staged = read_stage(spark, stage_dir, schema, fmt=fmt, pattern=pattern)
     good, bad = split_corrupt(staged) if fmt == "json" else (staged, None)
     try:
-        n = good.count()
+        if bad is None:
+            n, n_bad = good.count(), 0
+        else:
+            # one aggregation over the parse split_corrupt cached
+            n, n_bad = staged.agg(
+                F.count_if(F.col(CORRUPT_COL).isNull()), F.count_if(F.col(CORRUPT_COL).isNotNull())
+            ).first()
         if n:
             write_parquet(good, target_dir)
-        n_bad = 0
-        if bad is not None and not bad.isEmpty():
-            n_bad = bad.count()
+        if n_bad:
             bad.write.mode("append").json(target_dir + "__rejects")
     finally:
         # split_corrupt cached the parse, and the cache matches plans by
@@ -75,7 +86,8 @@ def copy_into(
             float(t0),
             float(time.time()),
         )
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [row],
             "target string, n_files long, rows_loaded long, rows_rejected long, "
             "file_bytes long, started double, completed double",
@@ -116,37 +128,56 @@ def merge_upsert(
     plain-parquet equivalent of MERGE INTO (a table format like
     Delta/Iceberg does this transactionally; the dataflow is identical).
     The anti join broadcasts the update KEYS only, so cost is one pass
-    over the current table regardless of update width.
+    over the current table regardless of update width. Both counts are
+    observed during that one write, not by extra jobs.
 
     Returns (rows_updated_or_inserted, total_rows_after).
     """
-    import shutil
+    from pyspark.sql import Observation
 
-    n_upd = updates.count()
+    _restore_interrupted_swap(table_dir)
+    obs_upd, obs_total = Observation(), Observation()
+    observed = updates.observe(obs_upd, F.count(F.lit(1)).alias("n"))
     if os.path.isdir(table_dir) and any(f.endswith(".parquet") for f in os.listdir(table_dir)):
         current = spark.read.parquet(table_dir)
         keys = updates.select(key).distinct()
         survivors = current.join(F.broadcast(keys), key, "left_anti")
-        merged = survivors.unionByName(updates)
+        merged = survivors.unionByName(observed)
     else:
-        merged = updates
+        merged = observed
     tmp = table_dir.rstrip("/") + "__merge"
-    merged.write.mode("overwrite").parquet(tmp)
-    total = spark.read.parquet(tmp).count()
+    merged.observe(obs_total, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(tmp)
+    n_upd, total = obs_upd.get["n"], obs_total.get["n"]
     _swap_into_place(tmp, table_dir)
     return n_upd, total
+
+
+def _restore_interrupted_swap(table_dir: str) -> None:
+    """Finish what a crash inside ``_swap_into_place`` left behind. A lone
+    ``__old`` is the only complete copy of the table (the crash came after
+    the rename, before the move), so it goes back into place; next to a
+    table dir it is the previous version, already replaced, and goes."""
+    import shutil
+
+    old = table_dir.rstrip("/") + "__old"
+    if not os.path.isdir(old):
+        return
+    if os.path.isdir(table_dir):
+        shutil.rmtree(old)
+    else:
+        os.rename(old, table_dir)
 
 
 def _swap_into_place(tmp: str, table_dir: str) -> None:
     """Crash-safe directory swap: every intermediate state keeps at least
     one complete copy of the table (rename old aside → move new into
     place → delete old), unlike rmtree-then-move which has a window
-    where the table is simply gone."""
+    where the table is simply gone. Callers run
+    ``_restore_interrupted_swap`` before they read the table, which
+    recovers from a crash between any two steps."""
     import shutil
 
     old = table_dir.rstrip("/") + "__old"
-    if os.path.isdir(old):
-        shutil.rmtree(old)  # leftover from a previous crash after step 2
     had_old = os.path.isdir(table_dir)
     if had_old:
         os.rename(table_dir, old)
@@ -165,6 +196,7 @@ def compact_parquet_dir(
     maintenance task. Returns (files_before, files_after)."""
     import math
 
+    _restore_interrupted_swap(table_dir)
     files_before = [
         f for f in glob.glob(os.path.join(table_dir, "**", "*.parquet"), recursive=True)
     ]

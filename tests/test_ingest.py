@@ -6,6 +6,7 @@ import gzip
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_school_spark.schemas import CLIENT_BUY_ORDERS
@@ -191,3 +192,107 @@ def test_merge_upsert_replaces_and_appends(spark, tmp_path):
     assert (n_upd, total) == (2, 4)
     got = {r.id: (r.name, r.v) for r in spark.read.parquet(table).collect()}
     assert got == {1: ("a", 10.0), 2: ("b2", 21.0), 3: ("c", 30.0), 4: ("d", 40.0)}
+
+
+def test_copy_into_rejects_corrupt_lines_with_plain_schema(spark, tmp_path):
+    """Without the capture column in the caller's schema, unparseable lines
+    still go to the rejects dir instead of loading as all-NULL rows."""
+    from etl_school_spark.sources.writers import copy_into
+
+    stage, target, hist = (str(tmp_path / d) for d in ("stage", "table", "copy_history"))
+    os.makedirs(stage)
+    _write_orders_json(spark, os.path.join(stage, "batch.json"), n=10, corrupt=2)
+    assert copy_into(spark, stage, target, CLIENT_BUY_ORDERS, history_dir=hist) == 10
+    loaded = spark.read.parquet(target)
+    assert loaded.columns == CLIENT_BUY_ORDERS.fieldNames()
+    assert loaded.count() == 10 and loaded.filter(F.col("txid").isNull()).count() == 0
+    rejects = [json.loads(r.value) for r in spark.read.text(target + "__rejects").collect()]
+    assert sorted(r["_corrupt_record"] for r in rejects) == ["{this is not json0", "{this is not json1"]
+    assert spark.read.parquet(hist).collect()[0].rows_rejected == 2
+
+
+def test_copy_into_and_merge_upsert_job_counts(spark, tmp_path):
+    """Pins the Spark jobs of a load and a merge, on the first write and on
+    a write into an existing table. copy_into: one counting aggregation
+    over the cached parse, the good write, the rejects write, the history
+    row. merge_upsert: the write alone on a first load; its counts come
+    from observations on that write, not from extra jobs."""
+    from etl_school_spark.sources.writers import copy_into, merge_upsert
+    from tests.jobcount import count_jobs
+
+    stage, target, hist = (str(tmp_path / d) for d in ("stage", "table", "copy_history"))
+    os.makedirs(stage)
+    for i in range(2):
+        _write_orders_json(spark, os.path.join(stage, f"batch_{i}.json"), n=8, corrupt=1, seed=i)
+        with count_jobs(spark) as jobs:
+            assert copy_into(spark, stage, target, CLIENT_BUY_ORDERS, history_dir=hist) == 8
+        assert jobs.n == 6, f"copy_into load {i}: {jobs.n} jobs"
+
+    table = str(tmp_path / "keyed")
+    for i, want in enumerate([(5, 5), (5, 7)]):
+        rows = [(k, f"v{i}") for k in range(2 * i, 2 * i + 5)]
+        updates = spark.createDataFrame(rows, "id long, v string")
+        with count_jobs(spark) as jobs:
+            assert merge_upsert(spark, table, updates, "id") == want
+        assert jobs.n == (1, 4)[i], f"merge_upsert {i}: {jobs.n} jobs"
+
+
+def _crash_once(monkeypatch, obj, name):
+    """Make ``obj.name`` raise on its first call, as a crash would."""
+    real = getattr(obj, name)
+    calls = []
+
+    def crash(*args, **kwargs):
+        if not calls:
+            calls.append(args)
+            raise OSError(f"injected crash in {name}")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(obj, name, crash)
+    return calls
+
+
+@pytest.mark.parametrize("step", ["rename", "move", "rmtree"])
+def test_merge_upsert_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatch, step):
+    """A crash before each step of the swap (rename table aside, move the
+    new version in, delete the old one) loses no committed row: the next
+    merge restores a lone ``__old`` before it reads the table."""
+    import shutil
+
+    from etl_school_spark.sources.writers import merge_upsert
+
+    schema = "id long, v string"
+    table = str(tmp_path / "keyed")
+    merge_upsert(spark, table, spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], schema), "id")
+    calls = _crash_once(monkeypatch, os if step == "rename" else shutil, step)
+    with pytest.raises(OSError, match="injected crash"):
+        merge_upsert(spark, table, spark.createDataFrame([(2, "b2"), (4, "d")], schema), "id")
+    monkeypatch.undo()
+    first_arg = {"rename": table, "move": table + "__merge", "rmtree": table + "__old"}[step]
+    assert [c[0] for c in calls] == [first_arg]  # the crash hit the swap step named
+
+    merge_upsert(spark, table, spark.createDataFrame([(5, "e")], schema), "id")
+    got = {r.id: r.v for r in spark.read.parquet(table).collect()}
+    if step == "rmtree":  # the crashed merge had committed: its rows stay
+        assert got == {1: "a", 2: "b2", 3: "c", 4: "d", 5: "e"}
+    else:  # it had not: the table is as before it, plus the next merge
+        assert got == {1: "a", 2: "b", 3: "c", 5: "e"}
+    assert not os.path.exists(table + "__old")
+
+
+def test_compact_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatch):
+    import shutil
+
+    from etl_school_spark.sources.writers import compact_parquet_dir
+
+    table = str(tmp_path / "t")
+    spark.range(0, 300, numPartitions=6).write.parquet(table)
+    _crash_once(monkeypatch, shutil, "move")
+    with pytest.raises(OSError, match="injected crash"):
+        compact_parquet_dir(spark, table)
+    monkeypatch.undo()
+    assert not os.path.exists(table)  # the crash left only __old
+
+    assert compact_parquet_dir(spark, table) == (6, 1)
+    assert sorted(r.id for r in spark.read.parquet(table).collect()) == list(range(300))
+    assert not os.path.exists(table + "__old")

@@ -112,3 +112,137 @@ def test_partitioned_retention_drops_only_expired(spark, tmp_path):
     assert "PartitionFilters: [" in plan
     pf = plan.split("PartitionFilters: [", 1)[1].split("]")[0]
     assert pf.strip(), "partition-filter list is empty — predicate not pruned"
+
+
+def test_dag_runs_independent_branches_concurrently(spark, tmp_path):
+    """Siblings with no ``after`` path between them overlap: they meet at a
+    barrier that a serial run would break."""
+    import threading
+
+    from etl_school_spark.orchestrate import TaskDag
+
+    meet = threading.Barrier(2, timeout=20)
+
+    def sibling(s):
+        meet.wait()
+        return 1
+
+    dag = TaskDag(spark, str(tmp_path / "history"))
+    dag.add("root", lambda s: 1)
+    dag.add("left", sibling, after=["root"])
+    dag.add("right", sibling, after=["root"])
+    dag.add("join", lambda s: 1, after=["left", "right"])
+    assert dag.run("r1") == {n: "SUCCEEDED" for n in ["root", "left", "right", "join"]}
+
+
+def test_dag_wide_fan_out_keeps_dependency_order(spark, tmp_path):
+    """More ready tasks than cores, with a short switch interval: no task
+    starts before every parent has finished, and each gets one audit row."""
+    import sys
+    import threading
+    import time
+
+    from etl_school_spark.orchestrate import TaskDag
+
+    lock = threading.Lock()
+    finished: set[str] = set()
+    early: list[str] = []
+
+    def job(name, parents):
+        def fn(s):
+            with lock:
+                if not set(parents) <= finished:
+                    early.append(name)
+            time.sleep(0.002)
+            with lock:
+                finished.add(name)
+            return 1
+
+        return fn
+
+    dag = TaskDag(spark, str(tmp_path / "history"))
+    mids = [f"mid{i}" for i in range(16)]
+    joins = [f"join{j}" for j in range(4)]
+    dag.add("root", job("root", []))
+    for m in mids:
+        dag.add(m, job(m, ["root"]), after=["root"])
+    for j, name in enumerate(joins):
+        parents = mids[j * 4 : j * 4 + 4]
+        dag.add(name, job(name, parents), after=parents)
+    dag.add("final", job("final", joins), after=joins)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        status = dag.run("wide")
+    finally:
+        sys.setswitchinterval(interval)
+    assert early == []
+    assert status == {n: "SUCCEEDED" for n in dag.tasks}
+    rows = dag.history().collect()
+    assert sorted(r.task_name for r in rows) == sorted(dag.tasks)
+
+
+def test_dag_failed_branch_spares_independent_branch(spark, tmp_path):
+    """A failure stops only its own descendants; the other branch runs on,
+    and every task, run or not, gets exactly one audit row."""
+    from etl_school_spark.orchestrate import TaskDag
+
+    ran = []
+
+    def ok(name):
+        def fn(s):
+            ran.append(name)
+            return 1
+
+        return fn
+
+    def boom(s):
+        raise RuntimeError("deliberate")
+
+    dag = TaskDag(spark, str(tmp_path / "history"))
+    dag.add("root", ok("root"))
+    dag.add("bad", boom, after=["root"])
+    dag.add("bad_child", ok("bad_child"), after=["bad"])
+    dag.add("bad_grandchild", ok("bad_grandchild"), after=["bad_child"])
+    dag.add("good", ok("good"), after=["root"])
+    dag.add("good_child", ok("good_child"), after=["good"])
+    dag.add("fan_in", ok("fan_in"), after=["good_child", "bad"])
+
+    status = dag.run("r3")
+    assert status == {
+        "root": "SUCCEEDED",
+        "bad": "FAILED",
+        "bad_child": "UPSTREAM_FAILED",
+        "bad_grandchild": "UPSTREAM_FAILED",
+        "good": "SUCCEEDED",
+        "good_child": "SUCCEEDED",
+        "fan_in": "UPSTREAM_FAILED",
+    }
+    assert sorted(ran) == ["good", "good_child", "root"]
+    rows = dag.history().collect()
+    assert sorted((r.task_name, r.state) for r in rows) == sorted(status.items())
+    assert all(r.run_id == "r3" for r in rows)
+    assert "deliberate" in next(r.error for r in rows if r.task_name == "bad")
+
+
+def test_dag_tasks_inherit_callers_job_group(spark, tmp_path):
+    """Task threads inherit the caller's job group, so counting the jobs
+    around ``run`` still sees the jobs the tasks ran."""
+    from etl_school_spark.orchestrate import TaskDag
+    from tests.jobcount import count_jobs
+
+    def one_job(s):
+        s.range(5).collect()
+        return 1
+
+    def jobs_of(fn, run_id):
+        dag = TaskDag(spark, str(tmp_path / "history"))
+        dag.add("left", fn)
+        dag.add("right", fn)
+        with count_jobs(spark) as jobs:
+            assert set(dag.run(run_id).values()) == {"SUCCEEDED"}
+        return jobs.n
+
+    # the difference leaves out the audit write's own jobs
+    assert jobs_of(one_job, "busy") - jobs_of(lambda s: 1, "idle") == 2

@@ -15,6 +15,7 @@ def _cc(spark, n=200):
 
 def test_dq_metrics_and_alerts(spark, tmp_path):
     from etl_school_spark.quality import DqRule, dq_alerts, run_dq
+    from tests.jobcount import count_jobs
 
     df = _cc(spark)
     rules = [
@@ -25,7 +26,10 @@ def test_dq_metrics_and_alerts(spark, tmp_path):
     ]
     metrics_dir = str(tmp_path / "metrics")
     m = run_dq(spark, df, rules, metrics_dir)
-    vals = {r.metric_name: r.metric_value for r in m.collect()}
+    with count_jobs(spark) as jobs:  # the suite was aggregated once, in run_dq
+        vals = {r.metric_name: r.metric_value for r in m.collect()}
+    assert jobs.n == 0
+    assert sorted(spark.read.parquet(metrics_dir).collect()) == sorted(m.collect())
     assert vals["non_null_txn_id"] == 1.0
     assert vals["amount_ok"] == 1.0
     assert 0.8 < vals["approved_rate"] < 1.0
