@@ -192,16 +192,24 @@ def dedup_batch_against_index(
     # executor loss mid-batch no longer invalidates truncated lineage.
     # ``batch_index`` (r15, guide §2.6): a caller that also builds the
     # HISTORY index in the same session can construct both per-doc
-    # index leaves concurrently (they are independent jobs — Spark's
-    # scheduler overlaps them from two driver threads) and inject the
-    # batch's here; it must be operator_leaf(build_dedup_index(new_docs,
-    # ...)) with the same parameters. None keeps the serial in-call
-    # build, byte-identical to r14.
-    new_idx = (
-        batch_index
-        if batch_index is not None
-        else operator_leaf(build_dedup_index(new_docs, id_col, text_col, n, num_perm))
-    )
+    # index leaves on two driver threads (the lazy leaves overlap plan
+    # construction, not jobs) and inject the batch's here; it must be
+    # operator_leaf(build_dedup_index(new_docs, ...)) with the same
+    # parameters, and a frame with any other column set is rejected
+    # (ValueError). None keeps the serial in-call build, byte-identical
+    # to r14.
+    if batch_index is None:
+        new_idx = operator_leaf(build_dedup_index(new_docs, id_col, text_col, n, num_perm))
+    else:
+        # the column set is all a schema can check (n and num_perm are
+        # not visible in it); analysis only, no job
+        want = set(build_dedup_index(new_docs, id_col, text_col, n, num_perm).columns)
+        if set(batch_index.columns) != want:
+            raise ValueError(
+                f"batch_index columns {sorted(batch_index.columns)} are not "
+                f"build_dedup_index's {sorted(want)}"
+            )
+        new_idx = batch_index
     _tick(new_idx, "s1_batch_index")
 
     # 1a. exact vs history: fingerprint anti-join

@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_school_spark.dedup.cluster import operator_leaf
 from etl_school_spark.dedup.exact import drop_exact_duplicates
 from etl_school_spark.functions.corpus import filter_corpus
 from etl_school_spark.functions.sampling import pack_concat_windows, reshard
@@ -96,7 +97,18 @@ def build_corpus(
     perplexity against the trusted reference model exceeds ``max_ppl``
     drop (functions/lm.py). Documents too short to carry bigram evidence
     have no score and pass through — the rule battery's length bound is
-    the authority on those."""
+    the authority on those.
+
+    With ``near_dedup=True`` the returned frame reads one caller-owned
+    leaf: the filter (+ gate) → scrub → exact-dedup prefix, truncated by
+    ``operator_leaf`` (a localCheckpoint, or a reliable checkpoint when
+    ``spark.etl_school.checkpoint_dir`` is set) and materialized once,
+    during this call, by the near-dup stage's first jobs. Later actions on
+    the frame, such as ``write_corpus_shards``, read the leaf and never
+    ``docs``. As with every returned truncation leaf in this engine, its
+    blocks live while the frame is referenced and the ContextCleaner
+    reclaims them once it is not. With ``near_dedup=False`` the frame
+    stays lazy over ``docs``, which the plan reads once."""
     out = filter_corpus(docs, text_col, **filter_thresholds)
     if ppl_lm is not None and max_ppl is not None:
         from etl_school_spark.functions.lm import ppl_gate
@@ -105,6 +117,15 @@ def build_corpus(
     out = scrub_corpus(out, text_col)
     out = drop_exact_duplicates(out, id_col, text_col)
     if near_dedup:
+        # near dedup reads the corpus three times (shingle sets, quality
+        # scores, loser anti-join) and the write reads it again; without
+        # the leaf each read re-runs the filter battery, which fan_out
+        # cannot parallelize (Catalyst pushes a filter below its
+        # round-robin repartition). Lazy: under AQE, creating the leaf
+        # already runs the prefix's shuffle-map stages (the filter battery
+        # among them) and near dedup's first job computes the last stage,
+        # so an eager checkpoint's extra count job would buy nothing
+        out = operator_leaf(out)
         out = drop_near_duplicates(out, id_col, text_col)
     out = out.withColumn("n_tokens", token_count(text_col).cast("long"))
     # reshard FIRST: the one full-text shuffle. pack_concat_windows then
@@ -121,5 +142,8 @@ def write_corpus_shards(corpus: DataFrame, path: str) -> None:
 
     ``partitionBy("shard")`` + the pipeline's hash-ordered partitions →
     each shard directory holds one deterministically-ordered file set;
-    re-running the build writes byte-identical content."""
+    re-running the build writes byte-identical content. A near-dedup
+    build's frame reads its caller-owned prefix leaf (``build_corpus``),
+    so the write runs only near dedup's anti-join, the token count,
+    reshard and pack on top of it."""
     corpus.write.mode("overwrite").partitionBy("shard").parquet(path)

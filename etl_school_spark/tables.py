@@ -120,7 +120,15 @@ def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
     below that is exactly the case where a forced repartition buys
     nothing). Joins do NOT skip (a broadcast-hash join preserves the
     streamed side's partitioning), and neither does coalesce — it
-    narrows parallelism, which is what this guard exists to undo."""
+    narrows parallelism, which is what this guard exists to undo.
+
+    Only work stacked ABOVE the repartition gains the parallelism. A
+    filter applied to the returned frame is pushed below the round-robin
+    repartition by Catalyst (the optimized plan reads ``Repartition n,
+    true +- Filter(...)``), so it still runs inside the scan task, one
+    task per row group; a pipeline that needs an expensive filter run
+    once should materialize its output (``dedup.cluster.operator_leaf``)
+    rather than count on this guard."""
     if df.isStreaming:
         # streaming frames have no static partition count to inspect and
         # micro-batch parallelism is the trigger's concern — pass through
@@ -136,8 +144,13 @@ def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
     # of probes per sweep). A frame's partition count is a pure function
     # of its canonicalized plan + session confs, so memoize per
     # (application, semantic hash, parallelism). The memo holds partition
-    # COUNTS only — never data — and a hash collision can only mis-size
-    # a round-robin repartition, never change results.
+    # COUNTS only — never data. It is not result-neutral, though: a
+    # semanticHash collision (odds ~2^-32 per pair, ≤ 512 entries), or
+    # files under an unchanged path that change within one application,
+    # can flip the repartition decision, and the partition layout it
+    # produces is what partition-sensitive operators see — a seeded
+    # sample() or monotonically_increasing_id would then emit different
+    # rows. The risk is accepted for the probe time it saves.
     try:
         key = (df.sparkSession.sparkContext.applicationId, df.semanticHash(), n)
     except Exception:

@@ -655,13 +655,14 @@ def incremental_dedup_accepted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     batch = _planted_batch(docs)
     # materialized index, per the dedup_batch_against_index contract
-    # (production reads it from the persisted index table). r15 (guide
-    # §2.6 — overlap independent jobs): the history index and the
-    # batch's own index are independent subtrees whose leaf
-    # materializations each block the driver serially; two driver
-    # threads let Spark schedule both AQE stage waves in one window.
-    # Leaf contents are identical to the serial form (test-pinned by
-    # the oracle hash: same rows either way).
+    # (production reads it from the persisted index table). r15: the
+    # history index and the batch's own index are independent subtrees,
+    # built on two driver threads. Both leaves are lazy (operator_leaf's
+    # default), so what overlaps is driver-side plan construction —
+    # analysis, optimization and physical planning of each index — not
+    # Spark jobs: both materialize at the first downstream action. Leaf
+    # contents are identical to the serial form (test-pinned by the
+    # oracle hash: same rows either way).
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:

@@ -597,6 +597,31 @@ def test_incremental_dedup_against_index(spark):
     assert {r.doc_id for r in accepted2.collect()} == {202}
 
 
+def test_incremental_dedup_rejects_batch_index_with_wrong_columns(spark):
+    """An injected batch index must have build_dedup_index's column set;
+    any other frame (a dropped column, the raw batch) raises instead of
+    silently skewing the dedup decisions."""
+    import pytest
+
+    from etl_school_spark.dedup.incremental import (
+        build_dedup_index,
+        dedup_batch_against_index,
+    )
+
+    hist = spark.createDataFrame(
+        [(0, "alpha beta gamma delta epsilon zeta eta theta")],
+        "doc_id long, text string",
+    )
+    batch = spark.createDataFrame(
+        [(10, "one two three four five six seven eight nine")],
+        "doc_id long, text string",
+    )
+    index = build_dedup_index(hist).localCheckpoint()
+    for wrong in (build_dedup_index(batch).drop("sig"), batch):
+        with pytest.raises(ValueError, match="batch_index columns"):
+            dedup_batch_against_index(batch, index, batch_index=wrong)
+
+
 def test_incremental_dedup_null_text_out_of_contract(spark):
     """Null-text docs (null fingerprint) bypass exact dedup entirely:
     they never match history's fingerprints AND are excluded from the

@@ -3,21 +3,62 @@ filter → scrub → dedup → reshard → pack chain over real test data."""
 
 from __future__ import annotations
 
+import collections
+import gc
 import hashlib
+import random
+import time
 
 from pyspark.sql import functions as F
 
+from etl_school_spark.dedup.exact import drop_exact_duplicates
+from etl_school_spark.functions.corpus import filter_corpus
+from etl_school_spark.functions.sampling import pack_concat_windows, reshard
+from etl_school_spark.functions.text import token_count
 from etl_school_spark.pipeline import build_corpus, drop_near_duplicates, write_corpus_shards
+from etl_school_spark.privacy import scrub_corpus
 from etl_school_spark.tables import load_table
 
 SF = "/root/testdata/sf0.01"
+
+# filter thresholds every planted document passes
+LAX = dict(
+    min_tokens=5, min_mean_word_len=0.0, min_stopword_share=0.0,
+    min_alpha_share=0.0, max_top_word_share=1.0,
+    max_top_bigram_share=1.0, max_dup_trigram_frac=1.0,
+)
+
+
+def _lazy_stages(docs, n_shards, pack_capacity, **thresholds):
+    """The near-dedup build as one lazy composition of the public stages,
+    with no truncation: the reference build_corpus must reproduce."""
+    out = filter_corpus(docs, "text", **thresholds)
+    out = drop_near_duplicates(drop_exact_duplicates(scrub_corpus(out)))
+    out = out.withColumn("n_tokens", token_count("text").cast("long"))
+    out = reshard(out, "doc_id", n_shards)
+    return pack_concat_windows(out, "doc_id", "n_tokens", pack_capacity, n_shards)
+
+
+def _rows(df):
+    return collections.Counter(map(tuple, df.select(*sorted(df.columns)).collect()))
+
+
+def _plan_leaves(df):
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    return {leaves.apply(i).nodeName() for i in range(leaves.size())}
 
 
 def test_build_corpus_end_to_end(spark, tmp_path):
     docs = load_table(spark, SF, "documents")
     built = build_corpus(docs, n_shards=4, pack_capacity=256, near_dedup=True)
+    # the near-dedup build reads its one prefix leaf, never the documents
+    # scan: the write below does not re-run filter → scrub → exact dedup
+    assert "FileScan parquet" not in built._jdf.queryExecution().executedPlan().toString()
+    assert _plan_leaves(built) <= {"Scan ExistingRDD", "LocalTableScan"}, _plan_leaves(built)
     rows = built.collect()
     n_raw = docs.count()
+    # same rows as the untruncated composition of the public stages
+    assert _rows(built) == _rows(_lazy_stages(docs, 4, 256))
 
     # stages only ever DROP rows, and something must survive
     assert 0 < len(rows) < n_raw
@@ -67,6 +108,56 @@ def test_build_corpus_end_to_end(spark, tmp_path):
     assert plan.count("hashpartitioning(shard") == 1, plan
 
 
+def test_build_corpus_near_dedup_planted_copies_one_leaf(spark, tmp_path):
+    """Planted exact and near copies plus a PII string: the near-dedup
+    build equals the lazy stage composition, and after build + write the
+    session holds at most one more storage block set than before — the
+    returned frame's caller-owned prefix leaf."""
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(300)]
+
+    def doc():
+        return " ".join(rng.choice(vocab) for _ in range(40))
+
+    def near(t):  # one word of 40 changed: trigram jaccard ~0.85
+        ws = t.split()
+        ws[20] = "changed"
+        return " ".join(ws)
+
+    texts = [doc() for _ in range(30)]
+    texts[3] += " mail me at someone@example.com"
+    rows = [(i, t) for i, t in enumerate(texts)]
+    rows += [(100 + i, texts[i]) for i in range(5)]  # exact copies
+    rows += [(200 + i, near(texts[10 + i])) for i in range(5)]  # near copies
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+
+    sc = spark.sparkContext
+
+    def n_blocks():
+        return len(sc._jsc.sc().getRDDStorageInfo())
+
+    before = n_blocks()
+    built = build_corpus(docs, n_shards=2, pack_capacity=64, near_dedup=True, **LAX)
+    write_corpus_shards(built, str(tmp_path / "corpus"))
+    # superseded working leaves are reclaimable once a driver GC lets the
+    # ContextCleaner unpersist them (the tools/census_registry gc step)
+    growth = n_blocks() - before
+    for _ in range(4):
+        if growth <= 1:
+            break
+        gc.collect()
+        sc._jvm.System.gc()
+        time.sleep(1.5)
+        growth = n_blocks() - before
+    assert growth <= 1, growth
+
+    assert _rows(built) == _rows(_lazy_stages(docs, 2, 64, **LAX))
+    ids = {r.doc_id for r in built.select("doc_id").collect()}
+    assert not ids & {100 + i for i in range(5)}  # exact copies dropped
+    assert all(len(ids & {10 + i, 200 + i}) == 1 for i in range(5))
+    assert not any("someone@example.com" in r.text for r in built.select("text").collect())
+
+
 def test_drop_near_duplicates_keeps_best_quality(spark):
     """Planted near-dup pair: the higher-quality copy survives."""
     base = (
@@ -95,7 +186,6 @@ def test_build_corpus_ppl_gate(spark):
     import random
 
     from etl_school_spark.functions.lm import perplexity_scores, train_bigram_lm
-    from etl_school_spark.pipeline import build_corpus
 
     base = (
         "the cat sat on the mat and the dog sat on the rug . "
@@ -115,17 +205,12 @@ def test_build_corpus_ppl_gate(spark):
         [(1, base), (2, base + "extra tail ."), (3, gibberish)],
         "doc_id long, text string",
     )
-    lax = dict(
-        min_tokens=5, min_mean_word_len=0.0, min_stopword_share=0.0,
-        min_alpha_share=0.0, max_top_word_share=1.0,
-        max_top_bigram_share=1.0, max_dup_trigram_frac=1.0,
-    )
-    no_gate = build_corpus(docs, near_dedup=False, **lax)
+    no_gate = build_corpus(docs, near_dedup=False, **LAX)
     assert {r.doc_id for r in no_gate.collect()} == {1, 2, 3}
 
     # cut between the fluent and shuffled scores
     ppls = {r.doc_id: r.ppl for r in perplexity_scores(docs, lm).collect()}
     cut = (max(ppls[1], ppls[2]) + ppls[3]) / 2
     assert ppls[3] > cut > max(ppls[1], ppls[2])
-    gated = build_corpus(docs, near_dedup=False, ppl_lm=lm, max_ppl=cut, **lax)
+    gated = build_corpus(docs, near_dedup=False, ppl_lm=lm, max_ppl=cut, **LAX)
     assert {r.doc_id for r in gated.collect()} == {1, 2}

@@ -191,3 +191,13 @@ def test_quotient_rep_selection_has_no_set_key_window(spark):
         if bad:
             offenders[name] = bad
     assert offenders == {}, f"set-key rep-selection Window reappeared: {offenders}"
+
+
+def test_dump_query_plans_round_directory():
+    """The plan dumper files a tag under its round: "rNN_<suffix>" and a
+    bare "rNN" both land in plans/rNN/."""
+    from tools.dump_query_plans import plan_location
+
+    assert plan_location("r16_before") == ("r16", "before")
+    assert plan_location("r16") == ("r16", None)
+    assert plan_location("adhoc") == ("r14", "adhoc")

@@ -1,5 +1,10 @@
-"""Write plans/r14/<query>_<tag>.txt: the explain("formatted") output of
-each named query (default: the bench HEADLINE set) at the given sf_dir.
+"""Write the explain("formatted") output of each named query (default:
+the bench HEADLINE set) at the given sf_dir under plans/<round>/.
+
+The tag names the round directory: "rNN_<suffix>" writes
+plans/rNN/<query>_<suffix>.txt and a bare "rNN" writes plans/rNN/<query>.txt.
+Any other tag keeps the layout from before round directories:
+plans/r14/<query>_<tag>.txt.
 
 Usage: python tools/dump_query_plans.py <tag> [sf_dir] [query ...]
 """
@@ -12,6 +17,13 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def plan_location(tag: str) -> tuple[str, str | None]:
+    """(round directory, file suffix) for a tag: "r15_before" →
+    ("r15", "before"), "r15" → ("r15", None), "adhoc" → ("r14", "adhoc")."""
+    m = re.fullmatch(r"(r\d+)(?:_(.+))?", tag)
+    return (m.group(1), m.group(2)) if m else ("r14", tag)
+
+
 def main() -> int:
     tag = sys.argv[1]
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
@@ -22,12 +34,7 @@ def main() -> int:
     spark = get_spark("dump-query-plans")
     qs = e.queries()
     names = sys.argv[3:] or [n for n in HEADLINE if n in qs]
-    # r15 (ADVICE): derive the round directory from the tag — a tag of the
-    # form "r15_before" writes plans/r15/<query>_before.txt (the old code
-    # hardcoded plans/r14/ whatever the tag said). A prefix-less tag keeps
-    # the legacy layout for backward compatibility.
-    m = re.match(r"(r\d+)_(.+)", tag)
-    round_dir, file_tag = (m.group(1), m.group(2)) if m else ("r14", tag)
+    round_dir, file_tag = plan_location(tag)
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans", round_dir,
@@ -40,7 +47,7 @@ def main() -> int:
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
         formatted = re.sub(r"Location: \S+", "Location: <sf_dir>", formatted)
-        path = os.path.join(out_dir, f"{name}_{file_tag}.txt")
+        path = os.path.join(out_dir, f"{name}_{file_tag}.txt" if file_tag else f"{name}.txt")
         with open(path, "w") as fh:
             fh.write(f"# {name} @ {sf_dir} — explain('formatted'), tag={tag}\n")
             fh.write(formatted.rstrip() + "\n")
