@@ -1,9 +1,14 @@
-"""Benchmark harness: runs headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
-{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+"""Benchmark harness: runs the registry's headline queries at
+$SPARK_GRAFT_SF_DIR on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line
+with exactly these keys: metric, value, unit, queries, warm_iters,
+cold_value, cold_queries, sf.
 
 Each query is executed to completion JVM-side via the noop sink (full scan +
-compute, no driver collect cost in the measurement).
+compute, no driver collect cost in the measurement). Knobs:
+SPARK_GRAFT_BENCH_SET (relational|pipeline|all), SPARK_GRAFT_BENCH_COLD=1
+(cold lane only) and SPARK_GRAFT_BENCH_ITERS (warm samples per query).
+The end-to-end benchmark of record is ``perfbench/``; this lane times the
+registry queries it does not.
 """
 
 from __future__ import annotations
@@ -82,24 +87,11 @@ def main() -> None:
         os.environ.get("SPARK_GRAFT_BENCH_SET", "all"), HEADLINE
     )
     names = [n for n in chosen if n in qs]
-    # allow extending the headline set via env without editing this file
-    extra = [n for n in os.environ.get("SPARK_GRAFT_BENCH_EXTRA", "").split(",") if n and n in qs]
-    names += [n for n in extra if n not in names]
 
     # One-time JVM I/O-stack init (Hadoop FS, parquet footer reader) would
     # otherwise land entirely on the first cold query; a 1-row read of the
     # smallest table pays it up front without warming any query's plan.
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).limit(1).collect()
-
-    # Environment canary pair (codegen + scan-shaped drift probes) —
-    # one shared definition with tools/sweep_sf1.py so the two stay
-    # definitionally identical; full rationale in etl_school_spark/canary.py.
-    # The start probe settles (bounded re-probe) when it lands out of the
-    # calm band — transient start noise refused a 0.1%-agreeing r14 final
-    # run; see settle_canaries' docstring.
-    from etl_school_spark.canary import run_canaries, settle_canaries
-
-    canaries = settle_canaries(spark, sf_dir, CALM_CANARY_BAND)
 
     # pass 1 = COLD lane: first run of each query in this session — plan
     # analysis, codegen compilation, file listing, cold page cache all
@@ -128,29 +120,15 @@ def main() -> None:
             s = sorted(samples[name])
             timings[name] = round(s[len(s) // 2], 4)
 
-    # Closing canary pair (r13, VERDICT item 1): the r13 anchor pair
-    # proved the START canary can miss the window entirely — a calm-band
-    # start canary (0.214) stamped a run whose total came out 18% SLOWER
-    # than its hot-canary sibling, i.e. the host state CHANGED during
-    # the 5-minute run. Re-sampling at the end makes that drift visible
-    # and lets the final_ok stamp refuse unstable windows.
-    end_canaries = run_canaries(spark, sf_dir)
-    canaries["canary_end_sec"] = end_canaries["canary_sec"]
-    canaries["canary_end_spread"] = end_canaries["canary_spread"]
-    canaries["canary_end_io_sec"] = end_canaries["canary_io_sec"]
-
     main_timings = cold if cold_only else timings
-    total = round(sum(main_timings.values()), 4)
     print(
         json.dumps(
             {
                 "metric": "headline_queries_total",
-                "value": total,
+                "value": round(sum(main_timings.values()), 4),
                 "unit": "sec",
                 "queries": main_timings,
                 "warm_iters": 0 if cold_only else warm_iters,
-                **canaries,
-                **_attribution(total, canaries),
                 "cold_value": round(sum(cold.values()), 4),
                 "cold_queries": cold,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
@@ -158,129 +136,6 @@ def main() -> None:
         )
     )
     spark.stop()
-
-
-# Calm-host codegen-canary reference: the r9–r11 calm-window medians read
-# 0.2488 / 0.2273 / 0.2284 (BENCH_r09–r11), so 0.22 is the committed
-# "quiet host" constant canary_norm normalizes against. It is NOT a
-# measurement of this round — changing it rescales every canary_norm, so
-# it stays fixed across rounds to keep the normalized series comparable.
-# r14 NOTE: the idle census showed those r9–r11 readings were young-JVM
-# values (see CALM_CANARY_BAND below); the constant is kept ONLY for the
-# (untrusted) canary_norm series' continuity.
-CALM_CANARY = 0.22
-
-# Re-derived calm band (r14, VERDICT item 1 — tools/idle_canary_census.py,
-# committed run tools/anchors/idle_canary_census_r14.jsonl): 12 canary
-# samples in one otherwise-idle long-lived session read
-# min/p10/median/p90/max = 0.1208/0.125/0.1312/0.1441/0.1823, settling
-# within two samples and staying flat — the JVM-steady-state idle canary
-# on this host is ~0.12–0.15, and the historical 0.20–0.23 "band" was a
-# band of young-JVM readings (run_canaries now warms past that state;
-# etl_school_spark/canary.py r14 note). Band = [p10×0.9, p90×1.1],
-# wide enough for idle jitter, far under the ×1.2+ contention the
-# refusal gates exist for. Re-derive with the census tool if the host
-# changes; the artifact's canary_in_calm_band field cites membership.
-CALM_CANARY_BAND = (0.11, 0.16)
-
-# canary_norm TRUST VERDICT (r13, measured —
-# tools/canary_norm_experiment.py, committed run in tools/anchors/):
-# under a CONSTANT injected 24-burner load — the formula's most
-# favorable condition — the codegen-normalized total lands 8% below the
-# unloaded same-code total and the scan-normalized one 11% below (both
-# outside the ±5% trust target), because the per-query response to the
-# SAME load spans ×0.77–1.59 (relational lines barely move while
-# CPU-bound pipeline lines absorb the contention). No scalar can
-# correct a non-uniform response; the r13 anchor pair additionally
-# showed the start-of-run canary can misread the window outright (a
-# calm-band canary on the SLOWER of two same-code runs). canary_norm
-# therefore stays in the artifact as a drift INDICATOR and series
-# continuity only. Trust order for cross-round perf claims:
-# same-session A/B > calm-band raw with final_ok=true (start AND end
-# canaries in band) > canary-normalized readings (never to ±10%).
-CANARY_NORM_TRUSTED = False
-
-# A warm total measured while the codegen canary runs >×1.2 off the
-# committed same-code anchor's canary is a HOST reading, not a code
-# reading (r11: same-code totals spanned 42→52 s across rounds purely on
-# host state) — the artifact says so itself instead of relying on
-# whoever reads it to open tools/anchors.
-CANARY_DEVIATION = 1.2
-
-
-def _attribution(total: float, canaries: dict) -> dict:
-    """Self-attribution fields (r12, VERDICT item 3): BENCH_rN vs
-    BENCH_rN-1 raw totals are only comparable when both hosts ran alike,
-    which across r10→r11 they did not (same-code anchor 52.0 vs the r10
-    final 42.2). Emit, IN the bench artifact: the committed same-code
-    anchor total for this round (the code-change-free reference), a
-    canary-normalized total (value × CALM_CANARY / canary_sec), and a
-    final_ok stamp that REFUSES when the canary deviates >×1.2 from the
-    anchor's — institutionalizing the anchor-first discipline."""
-    out: dict = {
-        "canary_norm": None,
-        "canary_norm_trusted": CANARY_NORM_TRUSTED,
-        "final_ok": True,
-    }
-    c = canaries.get("canary_sec")
-    if c and c > 0:
-        out["canary_norm"] = round(total * CALM_CANARY / c, 4)
-    # calm-band membership (r14): an interpretability stamp, not a
-    # refusal — a reading is fully citable when final_ok AND both
-    # canaries sit in the re-derived steady-state idle band
-    ce = canaries.get("canary_end_sec")
-    lo, hi = CALM_CANARY_BAND
-    out["calm_band"] = CALM_CANARY_BAND
-    out["canary_in_calm_band"] = bool(
-        c and lo <= c <= hi and (ce is None or lo <= ce <= hi)
-    )
-    # window stability (r13): a run whose END canary deviates >×1.2 from
-    # its START canary changed host state mid-run — the r13 anchor pair
-    # showed exactly this failure (calm start canary, slower total); the
-    # stamp refuses rather than letting the start reading certify it.
-    # r14: with run_canaries warmed to JVM steady state, start and end
-    # now measure the SAME state, so this comparison detects genuine
-    # contention in both directions instead of refusing every run on
-    # the systematic young-JVM start inflation (idle census finding).
-    if c and ce and (ce / c > CANARY_DEVIATION or c / ce > CANARY_DEVIATION):
-        out["final_ok"] = False
-        out["final_reason"] = (
-            f"canary start {c} vs end {ce}: host state changed during the "
-            "run — window unstable, re-run for a final stamp"
-        )
-    anchor_path = os.environ.get("SPARK_GRAFT_BENCH_ANCHOR")
-    if anchor_path is None:
-        import glob
-        import re
-
-        here = os.path.dirname(os.path.abspath(__file__))
-        cands = []
-        for p in glob.glob(os.path.join(here, "tools", "anchors", "bench_r*_anchor.json")):
-            m = re.search(r"bench_r(\d+)_anchor", p)
-            if m:
-                cands.append((int(m.group(1)), p))
-        anchor_path = max(cands)[1] if cands else None
-    if anchor_path and os.path.exists(anchor_path):
-        with open(anchor_path) as fh:
-            a = json.load(fh)
-        a = a.get("parsed", a)
-        out["anchor_path"] = os.path.relpath(anchor_path, os.path.dirname(os.path.abspath(__file__)))
-        out["anchor_total"] = a.get("value")
-        # like-for-like canary states (r14): pre-r14 anchors carry a
-        # young-JVM start canary; their END canary was always steady-
-        # state, so it is the value comparable to a warmed canary
-        ac = a.get("canary_end_sec") or a.get("canary_sec")
-        out["anchor_canary_sec"] = ac
-        if c and ac and (c / ac > CANARY_DEVIATION or ac / c > CANARY_DEVIATION):
-            out["final_ok"] = False
-            reason = (
-                f"canary {c} vs anchor {ac}: host deviates >x{CANARY_DEVIATION}"
-                " — reading is host-attributed, re-run on a calm host for a final stamp"
-            )
-            # don't drop an earlier window-instability refusal (r13)
-            prior = out.get("final_reason")
-            out["final_reason"] = f"{prior}; {reason}" if prior else reason
-    return out
 
 
 if __name__ == "__main__":

@@ -143,261 +143,36 @@ def test_ab_rounds_summarize():
     assert s["median_query_ratio"] == 0.5
 
 
-def test_bench_attribution_fields(tmp_path, monkeypatch):
-    """r12 (VERDICT item 3): the bench artifact self-attributes — it
-    carries the committed same-code anchor total, a canary-normalized
-    total, and refuses the final stamp when the canary deviates >x1.2
-    from the anchor's."""
-    import json
+def test_bench_prints_one_json_line_with_the_contract_keys():
+    """bench.py's contract: exactly one JSON line on stdout carrying the
+    headline total, the per-query timings and the cold lane — nothing
+    else (no host-drift fields)."""
+    import subprocess
     import sys
 
-    sys.path.insert(0, "/root/repo")
     import bench
+    from tests.conftest import SF_SMOKE
 
-    anchor = tmp_path / "bench_r99_anchor.json"
-    anchor.write_text(json.dumps({"value": 50.0, "canary_sec": 0.25}))
-    monkeypatch.setenv("SPARK_GRAFT_BENCH_ANCHOR", str(anchor))
-
-    ok = bench._attribution(55.0, {"canary_sec": 0.26})
-    assert ok["final_ok"] and ok["anchor_total"] == 50.0
-    assert ok["canary_norm"] == round(55.0 * bench.CALM_CANARY / 0.26, 4)
-    # r13 (measured, tools/canary_norm_experiment.py): canary_norm is a
-    # drift indicator, never a trusted corrector — the artifact says so
-    assert ok["canary_norm_trusted"] is False
-
-    hot = bench._attribution(55.0, {"canary_sec": 0.4})
-    assert not hot["final_ok"] and "host" in hot["final_reason"]
-
-    # r13: a run whose END canary deviates >x1.2 from its START canary
-    # changed host state mid-run — refused even when the start canary
-    # agrees with the anchor (the r13 anchor-pair inversion)
-    unstable = bench._attribution(55.0, {"canary_sec": 0.26, "canary_end_sec": 0.4})
-    assert not unstable["final_ok"] and "unstable" in unstable["final_reason"]
-
-    # both refusals present: neither reason is dropped
-    both = bench._attribution(55.0, {"canary_sec": 0.4, "canary_end_sec": 0.2})
-    assert not both["final_ok"]
-    assert "unstable" in both["final_reason"] and "host" in both["final_reason"]
-
-    # no canary at all: normalization absent, stamp not refused
-    bare = bench._attribution(55.0, {})
-    assert bare["canary_norm"] is None and bare["final_ok"]
-    assert bare["canary_in_calm_band"] is False  # no reading, no claim
-
-    # r14: calm-band membership stamp (re-derived steady-state band) —
-    # both canaries in-band → citable; either out → not
-    lo, hi = bench.CALM_CANARY_BAND
-    mid = round((lo + hi) / 2, 4)
-    anchor.write_text(json.dumps({"value": 50.0, "canary_sec": mid}))
-    calm = bench._attribution(51.0, {"canary_sec": mid, "canary_end_sec": mid})
-    assert calm["final_ok"] and calm["canary_in_calm_band"] is True
-    hot_end = bench._attribution(
-        51.0, {"canary_sec": mid, "canary_end_sec": round(hi * 1.1, 4)}
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SF_DIR=SF_SMOKE,
+        SPARK_GRAFT_BENCH_SET="relational",
+        SPARK_GRAFT_BENCH_COLD="1",
     )
-    assert hot_end["canary_in_calm_band"] is False
-
-    # r14: anchor comparison prefers the anchor's END canary (steady
-    # state) over its young-JVM start canary — a warmed reading that
-    # matches the anchor's end must stamp even when the anchor's start
-    # was inflated (the r13 universal-refusal failure mode)
-    anchor.write_text(json.dumps(
-        {"value": 50.0, "canary_sec": 0.25, "canary_end_sec": mid}
-    ))
-    warm = bench._attribution(51.0, {"canary_sec": mid, "canary_end_sec": mid})
-    assert warm["final_ok"], warm
-    assert warm["anchor_canary_sec"] == mid
-
-
-def test_settle_canaries_reprobes_transient_start(monkeypatch):
-    """r14 final-pair finding: a transiently-elevated START canary (the
-    partner JVM's shutdown still settling) refused a run whose end
-    canary and total were calm. settle_canaries re-probes (bounded)
-    until the start canary is in band, records every probe, and gives
-    up after `retries` so a genuinely loaded host still refuses."""
-    from etl_school_spark import canary as mod
-
-    band = (0.11, 0.16)
-    probes = iter([
-        {"canary_sec": 0.17, "canary_io_sec": 0.2},   # transient
-        {"canary_sec": 0.13, "canary_io_sec": 0.18},  # settled
-    ])
-    monkeypatch.setattr(mod, "run_canaries", lambda s, d: next(probes))
-    slept = []
-    out = mod.settle_canaries(None, "x", band, retries=2, sleep_sec=7,
-                              _sleep=slept.append)
-    assert out["canary_sec"] == 0.13
-    assert out["canary_probe_history"] == [0.17, 0.13]
-    assert out["canary_settle_retries"] == 1 and slept == [7]
-
-    # already in band: one probe, no sleep
-    monkeypatch.setattr(
-        mod, "run_canaries", lambda s, d: {"canary_sec": 0.12}
+    proc = subprocess.run(
+        [sys.executable, os.path.join(repo, "bench.py")],
+        env=env, capture_output=True, text=True, timeout=600,
     )
-    slept.clear()
-    out = mod.settle_canaries(None, "x", band, retries=2, _sleep=slept.append)
-    assert out["canary_probe_history"] == [0.12] and slept == []
-    assert out["canary_settle_retries"] == 0
-
-    # genuinely loaded host: retries exhaust, LAST probe reported, the
-    # out-of-band value flows to the gates which refuse as before
-    loaded = iter([{"canary_sec": v} for v in (0.3, 0.29, 0.31)])
-    monkeypatch.setattr(mod, "run_canaries", lambda s, d: next(loaded))
-    slept.clear()
-    out = mod.settle_canaries(None, "x", band, retries=2, sleep_sec=1,
-                              _sleep=slept.append)
-    assert out["canary_sec"] == 0.31
-    assert out["canary_probe_history"] == [0.3, 0.29, 0.31]
-    assert out["canary_settle_retries"] == 2 and len(slept) == 2
-
-
-def test_final_pair_summarize():
-    """r14: the end-of-round pair protocol's verdict is pure code —
-    cite the min over fully-stamped runs; refuse when none stamp; note
-    close agreement from partially-stamped partners."""
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    from final_pair import summarize_pair
-
-    # the actual r14 shape: run1 stamped, run2 refused on a transient
-    # start canary but agreeing to 0.1%
-    s = summarize_pair([
-        {"value": 53.8563, "final_ok": True, "canary_in_calm_band": True,
-         "canary_sec": 0.1353, "canary_end_sec": 0.1218},
-        {"value": 53.9173, "final_ok": False, "canary_in_calm_band": False,
-         "canary_sec": 0.1722, "canary_end_sec": 0.1137,
-         "final_reason": "window unstable"},
-    ])
-    assert s["citable"] and s["cited_total"] == 53.8563
-    assert s["min_total"] == 53.8563
-    assert s["agreement_spread_pct"] == 0.11
-    assert "corroborate" in s["note"]
-
-    # both stamped: min-across wins, no note needed
-    s2 = summarize_pair([
-        {"value": 55.0, "final_ok": True, "canary_in_calm_band": True},
-        {"value": 54.0, "final_ok": True, "canary_in_calm_band": True},
-    ])
-    assert s2["cited_total"] == 54.0 and "note" not in s2
-
-    # none stamped: refuse with a reason, still report min/agreement
-    s3 = summarize_pair([
-        {"value": 60.0, "final_ok": False, "canary_in_calm_band": False},
-        {"value": 70.0, "final_ok": True, "canary_in_calm_band": False},
-    ])
-    assert not s3["citable"] and s3["cited_total"] is None
-    assert "re-run" in s3["reason"] and s3["min_total"] == 60.0
-
-
-def test_sweep_anchor_loader_reads_both_shapes(tmp_path):
-    """r12: --anchor accepts a sweep JSONL (median lines + leading
-    canary line) AND a bench anchor JSON document (per-query map under
-    'queries'); previously the JSONL-only parser crashed on the bench
-    anchors the flag most wants."""
-    import json
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    from tools.sweep_sf1 import _load_anchor
-
-    jl = tmp_path / "sweep.jsonl"
-    jl.write_text(
-        '{"canary_sec": 0.21, "canary_spread": 0.1}\n'
-        '{"q": "a", "median": 2.5, "runs": [3.0, 2.5], "spread": 1.2, "anchor": 2.0}\n'
-        '{"b": 1.5}\n'
-        '{"c": "ERR boom"}\n'
-    )
-    anchor, canary = _load_anchor(str(jl))
-    assert anchor == {"a": 2.5, "b": 1.5} and canary == 0.21
-
-    doc = tmp_path / "bench_anchor.json"
-    doc.write_text(json.dumps({
-        "value": 49.3, "canary_sec": 0.33,
-        "queries": {"a": 1.1, "b": 2.2},
-    }, indent=1))
-    anchor, canary = _load_anchor(str(doc))
-    assert anchor == {"a": 1.1, "b": 2.2} and canary == 0.33
-
-    # r14: both shapes prefer the steady-state END canary when present —
-    # a pre-r14 anchor's start canary is a young-JVM reading
-    doc.write_text(json.dumps({
-        "value": 49.3, "canary_sec": 0.33, "canary_end_sec": 0.13,
-        "queries": {"a": 1.1},
-    }, indent=1))
-    anchor, canary = _load_anchor(str(doc))
-    assert anchor == {"a": 1.1} and canary == 0.13
-
-    jl.write_text(
-        '{"canary_sec": 0.29, "canary_spread": 0.1}\n'
-        '{"b": 1.5}\n'
-        '{"total": 99.9, "errors": 0, "canary_end_sec": 0.14, "final_ok": false}\n'
-    )
-    anchor, canary = _load_anchor(str(jl))
-    assert anchor == {"b": 1.5} and canary == 0.14
-
-
-def test_sweep_anchor_loader_shape_edge_cases(tmp_path):
-    """r13 (ADVICE): the loader dispatches on shape markers, not on
-    whole-file parse success — a SINGLE-LINE sweep JSONL (one median
-    line) parses as one JSON object and previously took the bench
-    branch, harvesting 'median'/'spread'/'anchor' as bogus queries; a
-    bench doc missing 'queries' similarly swept in 'value'/'sf'; and
-    the sweep's own closing total/final_ok stamp line must not become
-    query entries."""
-    import json
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    from tools.sweep_sf1 import _load_anchor
-
-    one = tmp_path / "one_line.jsonl"
-    one.write_text(
-        '{"q": "heavy", "median": 9.5, "runs": [9.5, 12.0], "spread": 1.26, "anchor": 8.0}\n'
-    )
-    anchor, canary = _load_anchor(str(one))
-    assert anchor == {"heavy": 9.5} and canary is None
-
-    no_queries = tmp_path / "bench_no_queries.json"
-    no_queries.write_text(json.dumps({"value": 49.3, "sf": 0.1, "cold_value": 86.0}))
-    anchor, canary = _load_anchor(str(no_queries))
-    assert anchor == {} and canary is None
-
-    with_stamp = tmp_path / "sweep_with_stamp.jsonl"
-    with_stamp.write_text(
-        '{"canary_sec": 0.21, "canary_spread": 0.1}\n'
-        '{"b": 1.5}\n'
-        '{"total": 99.9, "errors": 0, "anchor_canary_sec": 0.2, "final_ok": true}\n'
-    )
-    anchor, canary = _load_anchor(str(with_stamp))
-    assert anchor == {"b": 1.5} and canary == 0.21
-
-
-def test_sweep_and_bench_share_canary_deviation():
-    """r13 (ADVICE): the sweep's final_ok stamp previously hardcoded
-    1.2 while bench.py owned CANARY_DEVIATION — the two refusal gates
-    could silently drift. The sweep now imports the shared constant;
-    this pins that the import path works and the constant exists."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    import bench
-
-    assert isinstance(bench.CANARY_DEVIATION, float)
-    # r14 (ADVICE): assert the WIRING, not source text — the previous
-    # `"> 1.2" not in src` substring match would spuriously fail on any
-    # unrelated literal/comment starting with "> 1.2" (e.g. "> 1.25")
-    # and coupled the test to formatting. The import below fails loudly
-    # if sweep_sf1 stops importing the shared constant from bench.
-    import ast
-    import inspect
-
-    import tools.sweep_sf1 as sweep
-
-    tree = ast.parse(inspect.getsource(sweep))
-    imports_shared = any(
-        isinstance(node, ast.ImportFrom)
-        and node.module == "bench"
-        and any(a.name == "CANARY_DEVIATION" for a in node.names)
-        for node in ast.walk(tree)
-    )
-    assert imports_shared, "sweep_sf1 must import CANARY_DEVIATION from bench"
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    lines = proc.stdout.strip().splitlines()
+    assert len(lines) == 1, lines
+    out = json.loads(lines[0])
+    assert set(out) == {
+        "metric", "value", "unit", "queries", "warm_iters",
+        "cold_value", "cold_queries", "sf",
+    }
+    assert set(out["queries"]) == set(bench.RELATIONAL)
+    assert out["queries"] == out["cold_queries"] and out["warm_iters"] == 0
+    assert abs(out["value"] - sum(out["queries"].values())) < 1e-3
+    assert out["unit"] == "sec" and out["sf"] == 0.001

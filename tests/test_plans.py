@@ -38,9 +38,12 @@ _ARROW_OK = {
 
 
 def _all_queries():
+    """The registry plus the text components that sit outside it, so
+    doc_chunks / text_pii_scrub keep their plan gates."""
     import __spark_entry__ as e
+    from etl_school_spark.workload import textops
 
-    return e.queries()
+    return {**e.queries(), **textops.COMPONENTS}
 
 
 @pytest.fixture(scope="module")

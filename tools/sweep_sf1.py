@@ -9,121 +9,29 @@ run rejected (a groupBy-array pair expansion that never finished on
 16k-member buckets, and an expression-side bigram pairing ~2.7x slower
 once data dominated). Run it after any operator-shape change.
 
-``--medians N --anchor PATH`` (r11, VERDICT item 3): same-code sweep
-lines on this host span ×2.4 for the heavy queries, so one gate line
-cannot detect a real ×1.5 regression. With an anchor (a committed prior
-sweep JSONL), any query whose first reading deviates >×1.3 from its
-anchor line is re-run to N total readings and reported as a
-``{"q": median, "runs": [...], "spread": max/min, "anchor": a}`` line —
-the gate then carries a median + spread for exactly the queries where a
-single line is untrustworthy, without paying N× the sweep for the
-stable ones. Re-runs happen inside the same warm session, which is the
-point: a cold-in-sweep outlier (page cache, JIT, GC pause) shows up as
-a wide spread around a sane median instead of masquerading as a
-regression.
-
-Usage: python tools/sweep_sf1.py [sf_dir] [--medians N] [--anchor PATH] [query ...]
+Usage: python tools/sweep_sf1.py [sf_dir] [query ...]
 Extra positional args (r11) restrict the sweep to the named queries —
 the targeted gate for a change that touches a known subset. The first
 positional is treated as sf_dir only when it is an existing directory
 that is not a registered query name (r12, ADVICE) — so
 ``sweep_sf1.py dedup_simhash`` is a targeted sweep at the default
 directory, not an attempt to scan a directory named dedup_simhash.
-Default sf_dir: /root/repo/.sf1 (build it with tools/make_sf1.py).
+Default sf_dir: .sf1 at the repo root (build it with tools/make_sf1.py).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-DEVIATION = 1.3  # first-reading vs anchor ratio that triggers re-runs
-
-
-def _load_anchor(path: str) -> tuple[dict[str, float], float | None]:
-    """(per-query seconds, anchor canary_sec) from a prior sweep JSONL
-    (median lines use their median; ERR lines are skipped; the leading
-    canary line supplies the canary) OR from a bench anchor JSON
-    document (r12: ``tools/anchors/bench_r*_anchor.json`` is one
-    pretty-printed object — its per-query map lives under ``queries``;
-    previously this parser silently required JSONL and crashed on the
-    bench anchors the --anchor flag most wants)."""
-    anchor: dict[str, float] = {}
-    canary: float | None = None
-    with open(path) as fh:
-        text = fh.read()
-    try:
-        doc = json.loads(text)
-    except json.JSONDecodeError:
-        doc = None
-    # r13 (ADVICE): dispatch on SHAPE MARKERS, not on whether the whole
-    # file parses as one object — a single-line sweep JSONL parses as
-    # one dict and previously took the bench-document branch, harvesting
-    # 'median'/'spread'/'anchor' (or a queries-less bench doc's
-    # 'value'/'sf'/'cold_value') as bogus per-query entries. Only a doc
-    # that actually carries a queries MAP is a bench document; anything
-    # else goes through the line parser below.
-    if isinstance(doc, dict):
-        doc = doc.get("parsed", doc)  # BENCH_r*.json wrapper shape
-        if isinstance(doc.get("queries"), dict):
-            # like-for-like canary states (r14): pre-r14 anchors carry a
-            # young-JVM start canary; their END canary was steady-state,
-            # the value comparable to a warmed canary (bench.py r14)
-            canary = doc.get("canary_end_sec") or doc.get("canary_sec")
-            for k, v in doc["queries"].items():
-                if isinstance(v, (int, float)) and not k.startswith("canary"):
-                    anchor[k] = float(v)
-            return anchor, canary
-    for line in text.splitlines():
-        line = line.strip()
-        if not line.startswith("{"):
-            continue
-        d = json.loads(line)
-        if "canary_sec" in d and "total" not in d and "final_ok" not in d:
-            canary = d["canary_sec"]
-            continue
-        if "q" in d and "median" in d:
-            anchor[d["q"]] = float(d["median"])
-            continue
-        if "total" in d or "final_ok" in d:
-            # the sweep's own closing stamp — not a query line, but its
-            # END canary is the steady-state value a warmed canary
-            # compares to (r14), so prefer it when present
-            if d.get("canary_end_sec"):
-                canary = d["canary_end_sec"]
-            continue
-        if {"metric", "unit", "value", "sf", "cold_value"} & set(d):
-            continue  # a bench document without a queries map — nothing
-            # in it is a per-query line (ADVICE: 'value'/'sf'/'cold_value'
-            # previously swept in as bogus anchor entries)
-        for k, v in d.items():
-            if isinstance(v, (int, float)):
-                anchor[k] = float(v)
-    return anchor, canary
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
-    args = sys.argv[1:]
-    medians = 1
-    anchor_path = None
-    pos: list[str] = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--medians":
-            medians = int(args[i + 1])
-            i += 2
-        elif args[i] == "--anchor":
-            anchor_path = args[i + 1]
-            i += 2
-        else:
-            pos.append(args[i])
-            i += 1
-    anchor, anchor_canary = _load_anchor(anchor_path) if anchor_path else ({}, None)
+    pos = sys.argv[1:]
 
     import __spark_entry__ as e
     from etl_school_spark.session import get_spark
@@ -140,7 +48,7 @@ def main() -> int:
     else:
         # everything is a query filter; a non-query non-directory first
         # positional lands in the unknown-query guard's loud error
-        sf_dir, only = "/root/repo/.sf1", set(pos)
+        sf_dir, only = os.path.join(REPO, ".sf1"), set(pos)
     unknown = only - set(registry)
     if unknown:
         # a typo'd filter must not exit green having measured nothing
@@ -150,100 +58,20 @@ def main() -> int:
 
     spark = get_spark("etl-school-spark-sf1-sweep")
     spark.range(1000).count()  # JVM warm-up outside any query's clock
-    # host-drift canary pair, shared definition with bench.py (r10 —
-    # previously hand-mirrored): sweep totals on this machine vary ±30%
-    # between back-to-back runs of identical code — print the canaries
-    # so cross-round sweep comparisons can tell host noise from real
-    # regressions (rationale in etl_school_spark/canary.py)
-    from bench import CALM_CANARY_BAND
-    from etl_school_spark.canary import run_canaries, settle_canaries
-
-    canaries = settle_canaries(spark, sf_dir, CALM_CANARY_BAND)
-    print(json.dumps(canaries), flush=True)
     out: dict[str, object] = {}
     for name, fn in registry.items():
         if only and name not in only:
             continue
-        def one_run() -> float:
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            return round(time.time() - t0, 2)
-
+        t0 = time.time()
         try:
-            first = one_run()
+            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            out[name] = round(time.time() - t0, 2)
         except Exception as ex:  # keep sweeping — errors are the headline
             out[name] = f"ERR {type(ex).__name__}: {str(ex)[:200]}"
-            print(json.dumps({name: out[name]}), flush=True)
-            continue
-        a = anchor.get(name)
-        deviant = (
-            medians > 1
-            and a is not None
-            and a > 0
-            and (first / a > DEVIATION or a / first > DEVIATION)
-        )
-        if not deviant:
-            out[name] = first
-            print(json.dumps({name: first}), flush=True)
-            continue
-        runs = [first]
-        try:
-            while len(runs) < medians:
-                runs.append(one_run())
-        except Exception as ex:
-            out[name] = f"ERR {type(ex).__name__}: {str(ex)[:200]}"
-            print(json.dumps({name: out[name]}), flush=True)
-            continue
-        med = round(statistics.median(runs), 2)
-        out[name] = med
-        print(
-            json.dumps(
-                {
-                    "q": name,
-                    "median": med,
-                    "runs": runs,
-                    "spread": round(max(runs) / max(min(runs), 1e-9), 2),
-                    "anchor": a,
-                }
-            ),
-            flush=True,
-        )
+        print(json.dumps({name: out[name]}), flush=True)
     errs = sum(1 for v in out.values() if isinstance(v, str))
     total = round(sum(v for v in out.values() if isinstance(v, float)), 1)
-    # final stamp (r12, VERDICT item 3, the sweep half): a sweep whose
-    # codegen canary deviates >×1.2 from the anchor run's is a HOST
-    # reading — stamp the artifact itself so a gate line can't be read
-    # as code-attributed without opening the canary lines
-    # shared refusal threshold (r13, ADVICE): bench.py defines the
-    # constant; hardcoding 1.2 here let the two gates silently drift
-    from bench import CALM_CANARY_BAND, CANARY_DEVIATION
-
-    # closing canary (r13, same rationale as bench.py): a start-of-sweep
-    # canary can misread a window whose host state changes mid-sweep —
-    # re-sample at the end and refuse unstable windows
-    end_canaries = run_canaries(spark, sf_dir)
-    c, stamp = canaries.get("canary_sec"), {"final_ok": True}
-    ce = end_canaries.get("canary_sec")
-    reasons = []
-    if c and anchor_canary and (
-        c / anchor_canary > CANARY_DEVIATION or anchor_canary / c > CANARY_DEVIATION
-    ):
-        reasons.append(f"canary {c} vs anchor {anchor_canary}: host-attributed")
-    if c and ce and (ce / c > CANARY_DEVIATION or c / ce > CANARY_DEVIATION):
-        reasons.append(f"canary start {c} vs end {ce}: window unstable")
-    if reasons:
-        stamp = {"final_ok": False, "final_reason": "; ".join(reasons)}
-    # calm-band membership (r14, shared with bench.py): interpretability
-    # stamp — citable without caveats when final_ok AND in-band
-    lo, hi = CALM_CANARY_BAND
-    in_band = bool(c and lo <= c <= hi and (ce is None or lo <= ce <= hi))
-    print(json.dumps({"total": total, "errors": errs,
-                      "anchor_canary_sec": anchor_canary,
-                      "canary_end_sec": ce,
-                      "canary_end_io_sec": end_canaries.get("canary_io_sec"),
-                      "calm_band": CALM_CANARY_BAND,
-                      "canary_in_calm_band": in_band,
-                      **stamp}), flush=True)
+    print(json.dumps({"total": total, "errors": errs}), flush=True)
     print("TOTAL", total, "errors", errs, flush=True)
     return 1 if errs else 0
 
