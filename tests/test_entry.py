@@ -40,6 +40,13 @@ def test_first_50_slots_are_the_r13_verified_set():
     )
 
 
+def test_all_queries_execute(spark):
+    for name, fn in e.queries().items():
+        df = fn(spark, SF_SMOKE)
+        n = df.count()
+        assert n >= 0, name
+
+
 def test_oracle_parity_smoke(spark, duck):
     """Exact value parity vs DuckDB at sf0.001 (the driver gate runs sf0.01).
     Every registered query has an oracle, so this also executes (collects)
