@@ -38,12 +38,11 @@ def cmd_generate(args) -> int:
 
 def cmd_ingest(args) -> int:
     from etl_school_spark.schemas import CLIENT_BUY_ORDERS
-    from etl_school_spark.sources.readers import read_json_lines, split_corrupt
+    from etl_school_spark.sources.readers import read_stage, split_corrupt
     from etl_school_spark.sources.writers import write_parquet
 
     spark = _spark()
-    df = read_json_lines(spark, args.stage, CLIENT_BUY_ORDERS)
-    good, bad = split_corrupt(df)
+    good, bad = split_corrupt(read_stage(spark, args.stage, CLIENT_BUY_ORDERS))
     write_parquet(good, args.table_dir)
     print(json.dumps({"ingested": good.count(), "corrupt": bad.count(), "table": args.table_dir}))
     return 0

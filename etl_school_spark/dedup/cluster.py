@@ -25,48 +25,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _session_checkpoint_dir(df: DataFrame) -> str | None:
-    """Durable-checkpoint posture for the REGISTERED entry points (r13,
-    VERDICT item 3): the query registry calls the dedup operators with no
-    explicit ``checkpoint_dir``, so on a real cluster every truncation
-    point is a localCheckpoint — executor loss invalidates the truncated
-    lineage mid-query. Setting ``spark.etl_school.checkpoint_dir`` on
-    the session routes every components/quotient truncation through
-    RELIABLE ``Dataset.checkpoint`` into that directory (point it at
-    fault-tolerant storage) without threading a parameter through each
-    operator signature. An explicit ``checkpoint_dir`` argument wins."""
-    try:
-        v = df.sparkSession.conf.get("spark.etl_school.checkpoint_dir", None)
-    except Exception:
-        v = None
-    return v or None
-
-
 def operator_leaf(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Truncate lineage at an OPERATOR WORKING LEAF (shingle sets,
-    signature scans, quotient reps, incremental stage boundaries),
-    honoring the session durable-checkpoint conf (r14, VERDICT item 2).
+    """Truncate lineage — the ONE place the engine chooses between
+    ``localCheckpoint`` and a reliable ``checkpoint`` and registers the
+    checkpoint directory. Operator working leaves (shingle sets,
+    signature scans, quotient reps, incremental stage boundaries) and
+    the components/quotient truncation points all come through here.
 
-    r13 routed the components/quotient truncations through reliable
-    ``Dataset.checkpoint`` when ``spark.etl_school.checkpoint_dir`` is
-    set, but the operator leaves stayed hardcoded ``localCheckpoint`` —
-    a single-hop fragility: losing an executor mid-query fails the
-    query cleanly (retry recomputes from parquet; no mid-loop lineage
-    corruption, unlike the iterative components loop), but the durable
-    conf read stronger than its coverage. This helper threads the same
-    dispatch through every truncation point in the registered dedup
-    paths: conf set → reliable checkpoint into the (fault-tolerant)
-    directory; unset → the cheaper localCheckpoint, byte-identical to
-    the pre-r14 behavior.
+    ``spark.etl_school.checkpoint_dir`` set on the session → reliable
+    ``Dataset.checkpoint`` into that directory (point it at
+    fault-tolerant storage: on a real cluster executor loss invalidates
+    a localCheckpoint'ed lineage mid-query). The directory is registered
+    on every call, so no caller can reach a checkpoint before it is set.
+    Unset → the cheaper localCheckpoint. The registered query entry
+    points take no checkpoint argument; the conf is their durable mode.
 
     Storage note: reliable-checkpoint FILES outlive ``unpersist`` —
     ``_release_plan_blocks``/``release_batch_checkpoints`` stay correct
     (they free block-manager storage; on reliable checkpoints they are
     a no-op) and file cleanup belongs to the checkpoint-dir lifecycle
     (``spark.cleaner.referenceTracking.cleanCheckpoints`` or the job's
-    own sweep), exactly as for the components-loop checkpoints."""
-    d = _session_checkpoint_dir(df)
-    if d is not None:
+    own sweep)."""
+    d = df.sparkSession.conf.get("spark.etl_school.checkpoint_dir", None)
+    if d:
         df.sparkSession.sparkContext.setCheckpointDir(d)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
@@ -140,7 +121,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 15,
-    checkpoint_dir: str | None = None,
     collect_cap: int | None = None,
 ) -> DataFrame:
     """Components of the undirected graph given by ``edges``.
@@ -149,14 +129,10 @@ def connected_components(
     a deterministic canonical label. Nodes appearing in no edge are not
     emitted (callers union singletons if needed).
 
-    ``checkpoint_dir``: directory for RELIABLE periodic checkpoints
-    (sets ``sc.setCheckpointDir`` and uses ``Dataset.checkpoint`` at the
-    truncation points instead of the executor-local form) — the
-    production setting for long-lived jobs, where executor loss must not
-    lose the truncated lineage; point it at fault-tolerant storage
-    (HDFS/S3). Checkpoint FILES outlive the job unless
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` or the dir
-    is swept; the default (None) keeps the cheaper localCheckpoint,
+    Every truncation point goes through ``operator_leaf``: reliable
+    checkpoints when the session sets ``spark.etl_school.checkpoint_dir``
+    (the production setting for long-lived jobs, where executor loss
+    must not lose the truncated lineage), otherwise localCheckpoint,
     whose superseded block sets ARE released explicitly each time a
     newer truncation materializes (see _release_plan_blocks).
 
@@ -177,18 +153,6 @@ def connected_components(
     23.5 → 22.0 s (×0.94, 250.6k edges — the PPJoin pair pipeline
     dominates there).
     """
-    if checkpoint_dir is None:
-        checkpoint_dir = _session_checkpoint_dir(edges)
-    if checkpoint_dir is not None:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _truncate(df: DataFrame, eager: bool) -> DataFrame:
-        return (
-            df.checkpoint(eager=eager)
-            if checkpoint_dir is not None
-            else df.localCheckpoint(eager=eager)
-        )
-
     # edges feeds und twice (forward + swapped) and EVERY round's plan —
     # truncate it, don't just persist it (r8, measured): persist caches
     # the DATA but every cached-frame reference still embeds the full
@@ -201,7 +165,7 @@ def connected_components(
     # the same job, so dispatch pays one blocking job instead of two
     # (eager checkpoint count + probe count). Without a probe the eager
     # form stands: the loop's first action needs the data anyway.
-    edges = _truncate(edges, collect_cap is None)
+    edges = operator_leaf(edges, collect_cap is None)
     if collect_cap is not None and edges.count() <= collect_cap:
         small = _collected_components(edges, src, dst)
         if small is not None:
@@ -253,14 +217,14 @@ def connected_components(
         # with round count until it OOMs the driver on high-diameter
         # graphs (observed: heap exhaustion inside generateTreeString on
         # a hypothesis-generated long-chain graph). Truncate every third
-        # round — localCheckpoint by default, reliable checkpoint() when
-        # checkpoint_dir is set: lineage depth stays ≤ 3 for ANY round
+        # round (operator_leaf — localCheckpoint, or reliable in durable
+        # mode): lineage depth stays ≤ 3 for ANY round
         # count — the required shape for iterative DataFrame algorithms —
         # while fast-converging graphs (near-dup cliques, diameter ≤ 3)
         # keep the cheaper columnar cache.
         is_ckpt = it % 3 == 2
         if is_ckpt:
-            new_labels = _truncate(new_labels, False)
+            new_labels = operator_leaf(new_labels, False)
         else:
             new_labels = new_labels.persist()
         last_was_ckpt = is_ckpt
@@ -294,7 +258,7 @@ def connected_components(
     # on a checkpoint round the convergence action already materialized
     # a leaf and there is nothing to do.
     if not last_was_ckpt:
-        final = _truncate(labels, True)
+        final = operator_leaf(labels, True)
         labels.unpersist()
         if prev_ckpt is not None:
             _release_plan_blocks(prev_ckpt)
@@ -343,7 +307,6 @@ def quotient_components(
     rep_pairs: DataFrame,
     stars: DataFrame,
     collect_cap: int | None = None,
-    checkpoint_dir: str | None = None,
     star_count: int | None = None,
 ) -> DataFrame:
     """Components of (rep_pairs ∪ stars) WITHOUT pushing the star edges
@@ -410,22 +373,6 @@ def quotient_components(
     ADVICE). The output leaf itself follows the connected_components
     convention: it belongs to the caller.
     """
-    if checkpoint_dir is None:
-        checkpoint_dir = _session_checkpoint_dir(rep_pairs)
-    if checkpoint_dir is not None:
-        # r12 ADVICE (medium): the probe leaf below may checkpoint BEFORE
-        # connected_components runs, so the directory must be registered
-        # at entry — previously only connected_components set it and a
-        # (checkpoint_dir, collect_cap) call crashed on the eager leaf
-        rep_pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _leaf(df: DataFrame, eager: bool) -> DataFrame:
-        return (
-            df.checkpoint(eager=eager)
-            if checkpoint_dir is not None
-            else df.localCheckpoint(eager=eager)
-        )
-
     # Measured dispatch (r12): the deferral pays two extra distributed
     # stages (member join + self-rep distinct), which at TINY star
     # counts costs more than it saves — only copy-heavy corpora (the
@@ -435,14 +382,12 @@ def quotient_components(
         if star_count is None:
             # lazy leaf + count = one blocking job, not two (r15 —
             # the count materializes the checkpoint it probes)
-            stars = _leaf(stars, False)
+            stars = operator_leaf(stars, False)
             owned_stars = stars
             star_count = stars.count()
         if star_count <= collect_cap:
             out = connected_components(
-                rep_pairs.unionByName(stars),
-                collect_cap=collect_cap,
-                checkpoint_dir=checkpoint_dir,
+                rep_pairs.unionByName(stars), collect_cap=collect_cap
             )
             # out is self-contained (connected_components truncates its
             # output or collects it), so the probe's stars leaf is no
@@ -450,19 +395,14 @@ def quotient_components(
             if owned_stars is not None:
                 _release_plan_blocks(owned_stars)
             return out
-    rep_labels = connected_components(
-        rep_pairs, collect_cap=collect_cap, checkpoint_dir=checkpoint_dir
-    )
+    rep_labels = connected_components(rep_pairs, collect_cap=collect_cap)
     rl = rep_labels.select(
         F.col("node").alias("id_a"), F.col("component").alias("_c")
     )
     # one materialized pass over the star join feeds both consumers
     # (members + self-labeled reps) — without it each re-runs the
     # corpus-proportional stars plan; the leaf is three ids per row.
-    # Routed through _leaf (r12 ADVICE): in reliable-checkpoint mode a
-    # hardcoded localCheckpoint here would silently break the
-    # fault-tolerance guarantee checkpoint_dir exists to provide.
-    sj = _leaf(stars.join(rl, "id_a", "left"), False)
+    sj = operator_leaf(stars.join(rl, "id_a", "left"), False)
     star_members = sj.select(
         F.col("id_b").alias("node"),
         F.coalesce(F.col("_c"), F.col("id_a")).alias("component"),
@@ -473,7 +413,7 @@ def quotient_components(
         .select(F.col("id_a").alias("node"), F.col("id_a").alias("component"))
         .distinct()
     )
-    out = _leaf(
+    out = operator_leaf(
         rep_labels.unionByName(star_members).unionByName(rep_self), True
     )
     # the eager output truncation above materialized sj (and everything

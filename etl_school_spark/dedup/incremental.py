@@ -236,9 +236,10 @@ def dedup_batch_against_index(
     # boundary keeps the tree additive. The checkpointed frame is
     # batch-sized (never corpus-sized) state the stage computed anyway.
     # RE-MEASURED r11 after the arrow sig form shrank the subtree
-    # (tools/ab_incremental_truncate.py, sf1, same-session medians of
-    # 3, outputs equal): truncate 10.43 s vs no-truncate 14.74 s — the
-    # per-stage toRdd cost (~8 s of codegen compile + broadcast builds)
+    # (tools/ab_incremental_truncate.py in git history at c2869dd, sf1,
+    # same-session medians of 3, outputs equal): truncate 10.43 s vs
+    # no-truncate 14.74 s — the per-stage toRdd cost (~8 s of codegen
+    # compile + broadcast builds)
     # is still CHEAPER than the multiplied re-analysis + re-execution
     # of the untruncated tree across the pipeline's actions, so the
     # truncation default stands (truncate_stages=True).

@@ -23,7 +23,7 @@ from graphlib import TopologicalSorter
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
-from etl_school_spark.session import local_frame
+from etl_school_spark.sources.writers import _restore_interrupted_swap, append_rows, replace_table
 
 AUDIT_SCHEMA = (
     "run_id string, task_name string, state string, scheduled_time double, "
@@ -93,9 +93,7 @@ class TaskDag:
                     status[name] = state
                     audit_rows.append((run_id, name, state, t0, t1, n, err))
                     graph.done(name)
-        local_frame(self.spark, audit_rows, AUDIT_SCHEMA).coalesce(1).write.mode("append").parquet(
-            self.history_dir
-        )
+        append_rows(self.spark, self.history_dir, audit_rows, AUDIT_SCHEMA)
         return status
 
     # -- monitoring (T7) --------------------------------------------------
@@ -142,11 +140,14 @@ def retention_sweep(
     """T10: delete rows older than the retention window (A4:1029-1035).
 
     Plain parquet has no row deletes — rewrite keeping recent rows
-    (at scale: date-partitioned table + partition drop, no rewrite).
-    Returns rows retained.
+    (at scale: date-partitioned table + partition drop, no rewrite) and
+    swap the rewrite in crash-safely; the retained rows are counted on
+    that one write. Returns rows retained.
     """
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    _restore_interrupted_swap(table_dir)
     df = spark.read.parquet(table_dir)
     now = (
         F.expr(f"timestampadd(SECOND, {int(now_ts)}, TIMESTAMP_NTZ '1970-01-01 00:00:00')")
@@ -154,17 +155,11 @@ def retention_sweep(
         else F.current_timestamp().cast("timestamp_ntz")
     )
     cutoff = now - F.expr(f"INTERVAL {keep_days} DAYS")
-    kept = df.filter(F.col(ts_col) >= cutoff)
-    kept.persist()
-    n = kept.count()
-    tmp = table_dir.rstrip("/") + "__compact"
-    kept.write.mode("overwrite").parquet(tmp)
-    kept.unpersist()
-    import shutil
-
-    shutil.rmtree(table_dir)
-    shutil.move(tmp, table_dir)
-    return n
+    kept = Observation()
+    replace_table(
+        df.filter(F.col(ts_col) >= cutoff).observe(kept, F.count(F.lit(1)).alias("n")), table_dir
+    )
+    return kept.get["n"]
 
 
 def write_date_partitioned(

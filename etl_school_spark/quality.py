@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_school_spark.session import local_frame
+from etl_school_spark.sources.writers import append_rows
 
 
 @dataclass
@@ -63,10 +64,9 @@ def run_dq(
     return the metric rows. The suite is aggregated once: the returned
     frame holds the collected rows, so reading it runs no second pass."""
     m = dq_metrics(df, rules, group)
-    m = local_frame(spark, m.collect(), m.schema)
     if metrics_dir:
-        m.coalesce(1).write.mode("append").parquet(metrics_dir)
-    return m
+        return append_rows(spark, metrics_dir, m.collect(), m.schema)
+    return local_frame(spark, m.collect(), m.schema)
 
 
 def latest_metrics(metrics: DataFrame) -> DataFrame:

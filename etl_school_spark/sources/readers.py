@@ -19,37 +19,15 @@ from pyspark.sql.types import StringType, StructField, StructType
 CORRUPT_COL = "_corrupt_record"
 
 
-def read_json_lines(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    keep_corrupt: bool = True,
-) -> DataFrame:
-    """JSON-lines reader with explicit schema and corrupt-record capture.
-
-    Rows that fail to parse land in ``_corrupt_record`` (the reference's
-    publisher counts them instead of crashing, simple_publish_data.py:31-41);
-    callers split on ``is_corrupt(df)``.
-    """
-    full = StructType(list(schema.fields) + [StructField(CORRUPT_COL, StringType())])
-    reader = (
-        spark.read.schema(full if keep_corrupt else schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-    )
-    return reader.json(path)
-
-
 def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(good_rows_without_corrupt_col, corrupt_rows).
+    """(good_rows_without_corrupt_col, corrupt_rows) of a JSON frame from
+    ``read_stage``, which always carries the capture column.
 
     The parsed frame is cached first: Spark refuses plans over raw JSON that
     prune to only the corrupt column (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and
     the ingest batch is re-read by both branches anyway. The caller releases
     it with ``df.unpersist()`` once both are consumed.
     """
-    if CORRUPT_COL not in df.columns:
-        return df, df.limit(0)
     df = df.cache()
     good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.filter(F.col(CORRUPT_COL).isNotNull())
@@ -71,11 +49,19 @@ def read_stage(
     ``pattern`` regex, A4:387). ``multi_line`` handles whole-array JSON
     files (strip_outer_array, A4:208-210): Spark's multiLine mode parses a
     top-level array into one row per element.
+
+    A JSON read always captures corrupt records (S16): ``_corrupt_record``
+    is added to ``schema`` when it is missing, and lines that fail to parse
+    land there (PERMISSIVE mode) instead of loading as all-NULL rows or
+    failing the read; ``split_corrupt`` separates them.
     """
+    if fmt == "json" and CORRUPT_COL not in schema.fieldNames():
+        schema = StructType(list(schema.fields) + [StructField(CORRUPT_COL, StringType())])
     reader = spark.read.schema(schema)
     if pattern:
         reader = reader.option("pathGlobFilter", pattern)
     if fmt == "json":
+        reader = reader.option("mode", "PERMISSIVE").option("columnNameOfCorruptRecord", CORRUPT_COL)
         if multi_line:
             reader = reader.option("multiLine", True)
         return reader.json(stage_dir)

@@ -16,10 +16,15 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import StructType
 
 from etl_school_spark.session import local_frame
 from etl_school_spark.sources.readers import CORRUPT_COL, read_stage, split_corrupt
+
+COPY_HISTORY_SCHEMA = (
+    "target string, n_files long, rows_loaded long, rows_rejected long, "
+    "file_bytes long, started double, completed double"
+)
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "append") -> None:
@@ -28,6 +33,19 @@ def write_parquet(df: DataFrame, path: str, mode: str = "append") -> None:
     compatibility; Spark's default dictionary encoding is kept here, it is
     strictly better for scans)."""
     df.write.mode(mode).parquet(path, compression="snappy")
+
+
+def append_rows(spark: SparkSession, table_dir: str, rows, schema: StructType | str) -> DataFrame:
+    """Append a few driver-side rows (audit records, collected metrics) to
+    the parquet table at ``table_dir`` as one file, and return them as a
+    frame. Every audit table the engine keeps — ``task_history``,
+    ``copy_history``, the DQ metrics table and the broker delivery audit —
+    is appended here. The rows go through ``session.local_frame`` (Arrow →
+    a JVM ``LocalRelation``), so the append is one short JVM job and starts
+    no Python worker."""
+    df = local_frame(spark, rows, schema)
+    df.coalesce(1).write.mode("append").parquet(table_dir)
+    return df
 
 
 def copy_into(
@@ -42,8 +60,8 @@ def copy_into(
 ) -> int:
     """S8/S11: load staged files into the target table dir, then purge.
 
-    Returns the number of rows loaded. JSON is always parsed with the
-    ``_corrupt_record`` capture column (added when ``schema`` lacks it), so
+    Returns the number of rows loaded. JSON is parsed with the
+    ``_corrupt_record`` capture column (``read_stage`` adds it), so
     unparseable lines are diverted to ``<target_dir>__rejects`` rather than
     failing the load or loading as all-NULL rows. With
     ``history_dir`` set, appends one audit row per load — the
@@ -53,10 +71,6 @@ def copy_into(
     t0 = time.time()
     pat = pattern or "*"
     files = sorted(glob.glob(os.path.join(stage_dir, pat)))
-    if fmt == "json" and CORRUPT_COL not in schema.fieldNames():
-        # without the capture column an unparseable line loads as an
-        # all-NULL row instead of going to the rejects dir
-        schema = StructType(list(schema.fields) + [StructField(CORRUPT_COL, StringType())])
     staged = read_stage(spark, stage_dir, schema, fmt=fmt, pattern=pattern)
     good, bad = split_corrupt(staged) if fmt == "json" else (staged, None)
     try:
@@ -86,12 +100,7 @@ def copy_into(
             float(t0),
             float(time.time()),
         )
-        local_frame(
-            spark,
-            [row],
-            "target string, n_files long, rows_loaded long, rows_rejected long, "
-            "file_bytes long, started double, completed double",
-        ).coalesce(1).write.mode("append").parquet(history_dir)
+        append_rows(spark, history_dir, [row], COPY_HISTORY_SCHEMA)
     if purge:
         for f in files:
             if os.path.isfile(f):
@@ -145,11 +154,19 @@ def merge_upsert(
         merged = survivors.unionByName(observed)
     else:
         merged = observed
-    tmp = table_dir.rstrip("/") + "__merge"
-    merged.observe(obs_total, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(tmp)
-    n_upd, total = obs_upd.get["n"], obs_total.get["n"]
+    replace_table(merged.observe(obs_total, F.count(F.lit(1)).alias("n")), table_dir)
+    return obs_upd.get["n"], obs_total.get["n"]
+
+
+def replace_table(df: DataFrame, table_dir: str) -> None:
+    """Replace the parquet table at ``table_dir`` with ``df``: write it
+    aside to ``<table_dir>__new``, then swap it in with
+    ``_swap_into_place``. Every table rewrite (merge, compaction,
+    retention) goes through here. ``df`` may read the table it replaces,
+    so callers run ``_restore_interrupted_swap`` before they build it."""
+    tmp = table_dir.rstrip("/") + "__new"
+    df.write.mode("overwrite").parquet(tmp)
     _swap_into_place(tmp, table_dir)
-    return n_upd, total
 
 
 def _restore_interrupted_swap(table_dir: str) -> None:
@@ -202,10 +219,7 @@ def compact_parquet_dir(
     ]
     total = sum(os.path.getsize(f) for f in files_before)
     n_out = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(table_dir)
-    tmp = table_dir.rstrip("/") + "__compact"
-    df.repartition(n_out).write.mode("overwrite").parquet(tmp)
-    _swap_into_place(tmp, table_dir)
+    replace_table(spark.read.parquet(table_dir).repartition(n_out), table_dir)
     files_after = glob.glob(os.path.join(table_dir, "*.parquet"))
     return len(files_before), len(files_after)
 

@@ -31,6 +31,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from etl_school_spark.sources.writers import append_rows
+
+# one row per (micro-batch, consumer): claimed_by ≈ the consumer group
+DELIVERY_AUDIT_SCHEMA = (
+    "topic string, claimed_by string, consumer_id int, batch_id long, "
+    "n_messages long, delivered_at double"
+)
+
 
 class FileBroker:
     def __init__(self, spark: SparkSession, root: str):
@@ -105,14 +113,11 @@ class FileBroker:
             )
             if per_task:
                 batch_df.write.mode("append").parquet(sink_dir)
-                audit = batch_df.sparkSession.createDataFrame(
-                    [
-                        (topic, group, int(r.consumer_id), int(batch_id), int(r.n_messages), time.time())
-                        for r in per_task
-                    ],
-                    "topic string, claimed_by string, consumer_id int, batch_id long, n_messages long, delivered_at double",
-                )
-                audit.coalesce(1).write.mode("append").parquet(audit_dir)
+                rows = [
+                    (topic, group, int(r.consumer_id), int(batch_id), int(r.n_messages), time.time())
+                    for r in per_task
+                ]
+                append_rows(batch_df.sparkSession, audit_dir, rows, DELIVERY_AUDIT_SCHEMA)
             batch_df.unpersist()
 
         q = (
@@ -161,11 +166,8 @@ class FileBroker:
                 n = batch_df.count()
                 if n:
                     batch_df.write.mode("append").parquet(sink_dir)
-                    batch_df.sparkSession.createDataFrame(
-                        [(topic_, group, int(_m), int(batch_id), int(n), time.time())],
-                        "topic string, claimed_by string, consumer_id int, batch_id long, "
-                        "n_messages long, delivered_at double",
-                    ).coalesce(1).write.mode("append").parquet(audit_dir)
+                    row = (topic_, group, int(_m), int(batch_id), int(n), time.time())
+                    append_rows(batch_df.sparkSession, audit_dir, [row], DELIVERY_AUDIT_SCHEMA)
 
             q = (
                 src.writeStream.foreachBatch(sink)

@@ -83,8 +83,11 @@ def _merge_into(spark: SparkSession, rollup_dir: str, delta: DataFrame) -> None:
         )
     else:
         merged = delta
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    merged.write.mode("overwrite").partitionBy("part").parquet(rollup_dir)
+    # dynamic for this write only: a session-wide conf would turn every
+    # later partitioned overwrite in the session dynamic too
+    merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "part"
+    ).parquet(rollup_dir)
     delta.unpersist()
 
 

@@ -482,10 +482,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (differential-pinned; the oracle's recursive closure over the
     # brute-force pair graph stays green), but the PPJoin runs over
     # DISTINCT sets only: sf1 full-query A/B 14.56 → 7.99 s median
-    # (tools/ab_clusters_quotient.py, outputs asserted equal). The
-    # collect_cap gates the same capped driver-side union-find inside
-    # the quotient; a mass-duplicated corpus past the cap takes the
-    # distributed loop unchanged.
+    # (tools/ab_clusters_quotient.py in git history at c2869dd, outputs
+    # asserted equal). The collect_cap gates the same capped driver-side
+    # union-find inside the quotient; a mass-duplicated corpus past the
+    # cap takes the distributed loop unchanged.
     labels = ngram_dup_groups(docs, threshold=0.8, n=3, collect_cap=1_000_000)
     # canonical selection: highest-quality member per component (id
     # tiebreak). The join moves only (id, quality) for CLUSTERED docs —

@@ -40,3 +40,16 @@ def pytest_configure(config):
         "when KAFKA_BOOTSTRAP is set and the spark-sql-kafka connector "
         "is on the classpath (skipped otherwise)",
     )
+
+
+@pytest.fixture
+def durable_checkpoints(spark, tmp_path):
+    """Durable-checkpoint mode: ``spark.etl_school.checkpoint_dir`` points
+    at ``tmp_path``, so every ``operator_leaf`` truncation writes a reliable
+    checkpoint there, until teardown unsets it. Yields the directory. A test
+    that first needs local-mode results takes it mid-test with
+    ``request.getfixturevalue("durable_checkpoints")``."""
+    key = "spark.etl_school.checkpoint_dir"
+    spark.conf.set(key, str(tmp_path))
+    yield tmp_path
+    spark.conf.unset(key)

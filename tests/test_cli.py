@@ -112,37 +112,6 @@ def test_sweep_first_positional_query_name_is_a_filter(capsys):
         sys.argv = old
 
 
-def test_ab_rounds_summarize():
-    """r14 (VERDICT item 3): the same-window A/B's summary math —
-    per-query medians over the paired run matrix, new/old ratio, and
-    err-marking (a query with ANY errored run drops from the totals
-    rather than averaging around the failure)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    from tools.ab_rounds import summarize
-
-    s = summarize({
-        "q1": {"old": [2.0, 1.0, 3.0], "new": [1.0, 0.5, 1.5]},
-        "q2": {"old": [1.0, 1.0, 1.0], "new": [2.0, "ERR boom", 2.0]},
-    })
-    assert s["errors"] == 1 and s["pairs"]["q2"]["err"] is True
-    assert s["pairs"]["q1"]["old_median"] == 2.0
-    assert s["pairs"]["q1"]["new_median"] == 1.0
-    assert s["pairs"]["q1"]["ratio"] == 0.5
-    # totals exclude the errored query entirely
-    assert s["total_old"] == 2.0 and s["total_new"] == 1.0
-    assert s["ratio_new_over_old"] == 0.5
-    # min-across lane (r14 control finding: x2-3 spikes on random cells
-    # make the min the least-contended reading at small iters)
-    assert s["pairs"]["q1"]["old_min"] == 1.0
-    assert s["min_total_old"] == 1.0 and s["min_total_new"] == 0.5
-    assert s["min_ratio_new_over_old"] == 0.5
-    # robust direction estimator: median over per-query ratios (errored
-    # queries excluded — only q1 contributes here)
-    assert s["median_query_ratio"] == 0.5
-
-
 def test_bench_prints_one_json_line_with_the_contract_keys():
     """bench.py's contract: exactly one JSON line on stdout carrying the
     headline total, the per-query timings and the cold lane — nothing

@@ -492,8 +492,8 @@ def test_adaptive_edjoin_exact_and_bounded(spark):
     assert n_freq <= n_lex, (n_freq, n_lex)
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """r4: checkpoint_dir switches the periodic lineage truncation to
+def test_connected_components_reliable_checkpoint(spark, durable_checkpoints):
+    """r4: durable mode switches the periodic lineage truncation to
     reliable Dataset.checkpoint — the production form that survives
     executor loss. A 60-node chain runs 15+ rounds (>= 5 truncation
     points); labels must be exact, checkpoint files must land in the
@@ -501,16 +501,13 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     leaf at most 3 rounds deep, not a 60-round join tower)."""
     from etl_school_spark.dedup.cluster import connected_components
 
-    ckpt = str(tmp_path / "ckpt")
     n = 60
     edges = [(i, i + 1) for i in range(n)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    out = connected_components(df, max_iterations=100, checkpoint_dir=ckpt)
+    out = connected_components(df, max_iterations=100)
     got = {r.node: r.component for r in out.collect()}
     assert got == {i: 0 for i in range(n + 1)}
-    import pathlib
-
-    files = list(pathlib.Path(ckpt).rglob("*"))
+    files = list(durable_checkpoints.rglob("*"))
     assert any(f.is_file() for f in files), "no reliable checkpoint written"
     plan = out._jdf.queryExecution().analyzed().toString()
     assert "LogicalRDD" in plan and plan.count("Join") <= 3
@@ -1424,19 +1421,19 @@ def test_quotient_components_deferred_branch_matches_union(spark):
         assert union_path  # non-trivial: the cliques must cluster
 
 
-def test_quotient_components_checkpoint_dir_with_cap(spark, tmp_path):
-    """r12 ADVICE (medium): quotient_components(checkpoint_dir=...,
-    collect_cap=...) crashed with 'Checkpoint directory has not been
-    set' — the dispatch probe checkpointed its stars leaf before
-    anything registered the directory (only connected_components set
-    it, and it runs after the leaf). Both dispatch branches must work
-    in reliable mode, and the deferred branch must write reliable
-    checkpoint FILES (the sj/output truncations previously hardcoded
-    localCheckpoint, silently dropping the fault-tolerance guarantee
-    checkpoint_dir documents)."""
-    import pathlib
-
+def test_quotient_components_checkpoint_dir_with_cap(spark, durable_checkpoints):
+    """r12 ADVICE (medium): quotient_components in durable mode with a
+    collect_cap crashed with 'Checkpoint directory has not been set' —
+    the dispatch probe checkpointed its stars leaf before anything
+    registered the directory. Both dispatch branches must work in
+    reliable mode, and the deferred branch must write reliable
+    checkpoint FILES of its own (its sj/output truncations once
+    hardcoded localCheckpoint, silently dropping the fault-tolerance
+    guarantee durable mode documents)."""
     from etl_school_spark.dedup.cluster import quotient_components
+
+    def files():
+        return {f for f in durable_checkpoints.rglob("*") if f.is_file()}
 
     rep_pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     stars = spark.createDataFrame(
@@ -1444,13 +1441,10 @@ def test_quotient_components_checkpoint_dir_with_cap(spark, tmp_path):
     )
     want = {(1, 1), (2, 1), (10, 1), (11, 1), (20, 1)}
     for cap, sub in ((1_000_000, "union"), (1, "deferred")):
-        ckpt = str(tmp_path / sub)
-        out = quotient_components(
-            rep_pairs, stars, collect_cap=cap, checkpoint_dir=ckpt
-        )
+        before = files()
+        out = quotient_components(rep_pairs, stars, collect_cap=cap)
         assert {(r.node, r.component) for r in out.collect()} == want, sub
-    files = list(pathlib.Path(str(tmp_path / "deferred")).rglob("*"))
-    assert any(f.is_file() for f in files), "no reliable checkpoint written"
+    assert files() - before, "no reliable checkpoint written by the deferred branch"
 
 
 def test_dup_groups_release_working_leaves(spark):
@@ -1502,15 +1496,13 @@ def test_release_plan_blocks_reflection_canary(spark):
     assert rdd.id() not in after, "release no longer frees the leaf"
 
 
-def test_dup_groups_respect_session_checkpoint_dir_conf(spark, tmp_path):
+def test_dup_groups_respect_session_checkpoint_dir_conf(spark, request):
     """r13 (r12 VERDICT item 3): setting
     ``spark.etl_school.checkpoint_dir`` on the session routes the
     components/quotient truncation points through RELIABLE
     Dataset.checkpoint — the durable posture for real clusters, where
     executor loss invalidates executor-local truncated lineage — with
     labels identical to local mode on both dispatch branches."""
-    import pathlib
-
     from etl_school_spark.dedup.ngram import ngram_dup_groups
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -1518,21 +1510,18 @@ def test_dup_groups_respect_session_checkpoint_dir_conf(spark, tmp_path):
     rows += [(200 + i, f"unique text number {i} with words {i * 7}") for i in range(8)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     want = {tuple(r) for r in ngram_dup_groups(df, threshold=0.8, n=3).collect()}
-    spark.conf.set("spark.etl_school.checkpoint_dir", str(tmp_path))
-    try:
-        got_union = {tuple(r) for r in ngram_dup_groups(df, threshold=0.8, n=3).collect()}
-        got_deferred = {
-            tuple(r)
-            for r in ngram_dup_groups(df, threshold=0.8, n=3, collect_cap=0).collect()
-        }
-    finally:
-        spark.conf.unset("spark.etl_school.checkpoint_dir")
+    ckpt = request.getfixturevalue("durable_checkpoints")
+    got_union = {tuple(r) for r in ngram_dup_groups(df, threshold=0.8, n=3).collect()}
+    got_deferred = {
+        tuple(r)
+        for r in ngram_dup_groups(df, threshold=0.8, n=3, collect_cap=0).collect()
+    }
     assert got_union == want == got_deferred
-    files = list(pathlib.Path(str(tmp_path)).rglob("*"))
+    files = list(ckpt.rglob("*"))
     assert any(f.is_file() for f in files), "no reliable checkpoint written"
 
 
-def test_operator_leaves_respect_session_checkpoint_dir_conf(spark, tmp_path):
+def test_operator_leaves_respect_session_checkpoint_dir_conf(spark, request):
     """r14 (VERDICT item 2): r13's durable-checkpoint conf covered the
     components/quotient truncations but the OPERATOR WORKING LEAVES
     (shingle sets, signature scans, quotient reps, the incremental
@@ -1543,8 +1532,6 @@ def test_operator_leaves_respect_session_checkpoint_dir_conf(spark, tmp_path):
     files, and — the sharp part — it creates ZERO new localCheckpoint
     storage blocks (reliable checkpoints live in the checkpoint dir,
     not the block manager, so any growth means a leaf the conf missed)."""
-    import pathlib
-
     from etl_school_spark.dedup.cluster import operator_leaf
     from etl_school_spark.dedup.incremental import (
         build_dedup_index,
@@ -1580,27 +1567,24 @@ def test_operator_leaves_respect_session_checkpoint_dir_conf(spark, tmp_path):
     def n_blocks() -> int:
         return len(sc._jsc.sc().getRDDStorageInfo())
 
-    spark.conf.set("spark.etl_school.checkpoint_dir", str(tmp_path))
-    try:
-        before = n_blocks()
-        got_mh = {
-            tuple(r) for r in minhash_dup_groups(df, threshold=0.8).collect()
-        }
-        got_sh = {
-            tuple(r)
-            for r in simhash_dup_groups(df, with_singletons=True).collect()
-        }
-        d_idx = operator_leaf(build_dedup_index(gen0))
-        d_acc, _ = dedup_batch_against_index(batch, d_idx, threshold=0.8)
-        got_acc = {r.doc_id for r in d_acc.select("doc_id").collect()}
-        growth = n_blocks() - before
-    finally:
-        spark.conf.unset("spark.etl_school.checkpoint_dir")
+    ckpt = request.getfixturevalue("durable_checkpoints")
+    before = n_blocks()
+    got_mh = {
+        tuple(r) for r in minhash_dup_groups(df, threshold=0.8).collect()
+    }
+    got_sh = {
+        tuple(r)
+        for r in simhash_dup_groups(df, with_singletons=True).collect()
+    }
+    d_idx = operator_leaf(build_dedup_index(gen0))
+    d_acc, _ = dedup_batch_against_index(batch, d_idx, threshold=0.8)
+    got_acc = {r.doc_id for r in d_acc.select("doc_id").collect()}
+    growth = n_blocks() - before
     assert got_mh == want_mh
     assert got_sh == want_sh
     assert got_acc == want_acc
     # ContextCleaner can only SHRINK the count mid-run, so growth > 0
     # can only come from a truncation point still on localCheckpoint
     assert growth <= 0, growth
-    files = [f for f in pathlib.Path(str(tmp_path)).rglob("*") if f.is_file()]
+    files = [f for f in ckpt.rglob("*") if f.is_file()]
     assert files, "no reliable checkpoint written by the operator leaves"

@@ -1468,15 +1468,13 @@ def test_random_quotient_groups_match_python_components(spark, seed):
 
 
 @pytest.mark.parametrize("seed", [14500])
-def test_random_quotient_groups_with_session_checkpoint_dir(spark, seed, tmp_path):
+def test_random_quotient_groups_with_session_checkpoint_dir(spark, seed, request):
     """r13 (r12 VERDICT item 3): one family-14 corpus run with the
     durable-checkpoint session conf set — every truncation point inside
     components/quotient becomes a RELIABLE Dataset.checkpoint (the real-
     cluster posture) and the labels must still match the pure-Python
     union-find over the sibling pair operator, on both dispatch
     branches."""
-    import pathlib
-
     from etl_school_spark.dedup.ngram import ngram_dup_groups, ngram_jaccard_pairs
 
     docs, threshold = build_quotient_case(seed)
@@ -1488,22 +1486,19 @@ def test_random_quotient_groups_with_session_checkpoint_dir(spark, seed, tmp_pat
         .collect()
     ]
     want = _py_components(pairs)
-    spark.conf.set("spark.etl_school.checkpoint_dir", str(tmp_path))
-    try:
-        got_union = {
-            (r.node, r.component)
-            for r in ngram_dup_groups(df, threshold=threshold, n=3).collect()
-        }
-        got_deferred = {
-            (r.node, r.component)
-            for r in ngram_dup_groups(
-                df, threshold=threshold, n=3, collect_cap=0
-            ).collect()
-        }
-    finally:
-        spark.conf.unset("spark.etl_school.checkpoint_dir")
+    ckpt = request.getfixturevalue("durable_checkpoints")
+    got_union = {
+        (r.node, r.component)
+        for r in ngram_dup_groups(df, threshold=threshold, n=3).collect()
+    }
+    got_deferred = {
+        (r.node, r.component)
+        for r in ngram_dup_groups(
+            df, threshold=threshold, n=3, collect_cap=0
+        ).collect()
+    }
     assert got_union == want == got_deferred, f"seed {seed} t={threshold}"
-    files = list(pathlib.Path(str(tmp_path)).rglob("*"))
+    files = list(ckpt.rglob("*"))
     assert any(f.is_file() for f in files), "no reliable checkpoint written"
 
 

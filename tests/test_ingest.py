@@ -26,12 +26,14 @@ def _write_orders_json(spark, path, n=25, corrupt=0, seed=42):
     return n
 
 
-def test_read_json_lines_with_corrupt_capture(spark, tmp_path):
-    from etl_school_spark.sources.readers import read_json_lines, split_corrupt
+def test_read_stage_json_with_corrupt_capture(spark, tmp_path):
+    """A JSON stage read adds the capture column to a plain schema, so
+    unparseable lines are counted apart instead of loading as NULL rows."""
+    from etl_school_spark.sources.readers import read_stage, split_corrupt
 
     p = str(tmp_path / "orders.json")
     _write_orders_json(spark, p, n=20, corrupt=3)
-    df = read_json_lines(spark, p, CLIENT_BUY_ORDERS)
+    df = read_stage(spark, p, CLIENT_BUY_ORDERS)
     good, bad = split_corrupt(df)
     assert good.count() == 20
     assert bad.count() == 3
@@ -42,14 +44,14 @@ def test_read_json_lines_with_corrupt_capture(spark, tmp_path):
 
 def test_read_gzip_json(spark, tmp_path):
     """S19: .json.gz replay files read natively."""
-    from etl_school_spark.sources.readers import read_json_lines, split_corrupt
+    from etl_school_spark.sources.readers import read_stage, split_corrupt
 
     plain = str(tmp_path / "orders.json")
     _write_orders_json(spark, plain, n=15)
     gz = str(tmp_path / "orders.json.gz")
     with open(plain, "rb") as src, gzip.open(gz, "wb") as dst:
         dst.write(src.read())
-    good, _ = split_corrupt(read_json_lines(spark, gz, CLIENT_BUY_ORDERS))
+    good, _ = split_corrupt(read_stage(spark, gz, CLIENT_BUY_ORDERS))
     assert good.count() == 15
 
 
@@ -268,7 +270,7 @@ def test_merge_upsert_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatch,
     with pytest.raises(OSError, match="injected crash"):
         merge_upsert(spark, table, spark.createDataFrame([(2, "b2"), (4, "d")], schema), "id")
     monkeypatch.undo()
-    first_arg = {"rename": table, "move": table + "__merge", "rmtree": table + "__old"}[step]
+    first_arg = {"rename": table, "move": table + "__new", "rmtree": table + "__old"}[step]
     assert [c[0] for c in calls] == [first_arg]  # the crash hit the swap step named
 
     merge_upsert(spark, table, spark.createDataFrame([(5, "e")], schema), "id")
@@ -278,6 +280,54 @@ def test_merge_upsert_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatch,
     else:  # it had not: the table is as before it, plus the next merge
         assert got == {1: "a", 2: "b", 3: "c", 5: "e"}
     assert not os.path.exists(table + "__old")
+
+
+def _retention_table(spark, path):
+    """20 rows ten days apart, ending at 2026-01-01: ids 0..9 are inside a
+    90-day window. Returns the sweep's ``now_ts``."""
+    import datetime
+
+    now = datetime.datetime(2026, 1, 1)
+    rows = [(i, now - datetime.timedelta(days=i * 10)) for i in range(20)]
+    spark.createDataFrame(rows, "id long, ts timestamp_ntz").write.parquet(path)
+    return now.timestamp()
+
+
+@pytest.mark.parametrize("step", ["rename", "move", "rmtree"])
+def test_retention_sweep_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatch, step):
+    """A crash before each step of the retention rewrite's swap keeps every
+    retained row: the next sweep restores a lone ``__old`` before it reads
+    the table, and keeps the same rows."""
+    import shutil
+
+    from etl_school_spark.orchestrate import retention_sweep
+
+    table = str(tmp_path / "t")
+    now_ts = _retention_table(spark, table)
+    calls = _crash_once(monkeypatch, os if step == "rename" else shutil, step)
+    with pytest.raises(OSError, match="injected crash"):
+        retention_sweep(spark, table, "ts", keep_days=90, now_ts=now_ts)
+    monkeypatch.undo()
+    first_arg = {"rename": table, "move": table + "__new", "rmtree": table + "__old"}[step]
+    assert [c[0] for c in calls] == [first_arg]  # the crash hit the swap step named
+
+    assert retention_sweep(spark, table, "ts", keep_days=90, now_ts=now_ts) == 10
+    assert sorted(r.id for r in spark.read.parquet(table).collect()) == list(range(10))
+    assert not os.path.exists(table + "__old")
+
+
+def test_retention_sweep_job_count(spark, tmp_path):
+    """A sweep runs two jobs: reading the table's footer schema, and the
+    one rewrite, on which an observation counts the retained rows. There
+    is no separate count job over a cached frame."""
+    from etl_school_spark.orchestrate import retention_sweep
+    from tests.jobcount import count_jobs
+
+    table = str(tmp_path / "t")
+    now_ts = _retention_table(spark, table)
+    with count_jobs(spark) as jobs:
+        assert retention_sweep(spark, table, "ts", keep_days=90, now_ts=now_ts) == 10
+    assert jobs.n == 2, f"retention_sweep: {jobs.n} jobs"
 
 
 def test_compact_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatch):

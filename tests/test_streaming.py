@@ -319,6 +319,36 @@ def test_continuous_rollup_survives_disjoint_then_mixed_batches(spark, workdir):
     assert got == {(10, "view"): (2, 5.0), (11, "view"): (2, 10.0)}
 
 
+def test_rollup_merge_leaves_session_overwrite_mode_alone(spark, workdir):
+    """The rollup merge's dynamic partition overwrite is an option of its
+    own writer, not a conf set on the session it is handed: after a merge
+    that session's conf is as before, and a later partitioned overwrite in
+    it still replaces the whole table (a stale partition does not
+    survive). ``continuous_rollup`` hands the merge the stream's cloned
+    session, so the merge is called here with the test session itself."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    from etl_school_spark.streaming.rollup import _batch_rollup, _merge_into, read_rollup
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    batch = spark.createDataFrame(
+        [(datetime.datetime(2024, 3, 1, 10, 5), "view", 1.5)],
+        "ts timestamp_ntz, event_type string, value double",
+    )
+    rollup = os.path.join(workdir, "rollup")
+    _merge_into(spark, rollup, _batch_rollup(batch))
+    assert [(r.n, r.sum_value) for r in read_rollup(spark, rollup).collect()] == [(1, 1.5)]
+    assert spark.conf.get(key) == before
+
+    out = os.path.join(workdir, "parts")
+    for n in (4, 2):
+        spark.range(n).withColumn("p", F.col("id")).write.mode("overwrite").partitionBy("p").parquet(out)
+    assert sorted(e for e in os.listdir(out) if e.startswith("p=")) == ["p=0", "p=1"]
+
+
 def test_group_members_split_topic_without_overlap(spark, workdir):
     """N-member consumer group: members own disjoint slices, the union is
     the whole topic, and the claim audit shows who claimed what."""
