@@ -36,9 +36,13 @@ def operator_leaf(df: DataFrame, eager: bool = False) -> DataFrame:
     ``Dataset.checkpoint`` into that directory (point it at
     fault-tolerant storage: on a real cluster executor loss invalidates
     a localCheckpoint'ed lineage mid-query). The directory is registered
-    on every call, so no caller can reach a checkpoint before it is set.
-    Unset → the cheaper localCheckpoint. The registered query entry
-    points take no checkpoint argument; the conf is their durable mode.
+    here, before the checkpoint, so no caller can reach a checkpoint
+    before it is set — but only when the context's current checkpoint
+    dir is not already under it: every ``setCheckpointDir`` creates a
+    fresh UUID subdirectory, so registering per call scattered one run's
+    files over one subdirectory per truncation. Unset → the cheaper
+    localCheckpoint. The registered query entry points take no
+    checkpoint argument; the conf is their durable mode.
 
     Storage note: reliable-checkpoint FILES outlive ``unpersist`` —
     ``_release_plan_blocks``/``release_batch_checkpoints`` stay correct
@@ -48,7 +52,15 @@ def operator_leaf(df: DataFrame, eager: bool = False) -> DataFrame:
     own sweep)."""
     d = df.sparkSession.conf.get("spark.etl_school.checkpoint_dir", None)
     if d:
-        df.sparkSession.sparkContext.setCheckpointDir(d)
+        # compared as qualified Hadoop paths, the form the context stores
+        # (<qualified d>/<uuid>)
+        sc = df.sparkSession.sparkContext
+        fs_path = sc._jvm.org.apache.hadoop.fs.Path
+        want = fs_path(d)
+        want = want.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(want)
+        current = sc.getCheckpointDir()
+        if current is None or not fs_path(current).getParent().equals(want):
+            sc.setCheckpointDir(d)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
 
@@ -306,8 +318,8 @@ def add_singletons(
 def quotient_components(
     rep_pairs: DataFrame,
     stars: DataFrame,
+    reps: DataFrame,
     collect_cap: int | None = None,
-    star_count: int | None = None,
 ) -> DataFrame:
     """Components of (rep_pairs ∪ stars) WITHOUT pushing the star edges
     through the iterative loop (r12).
@@ -353,22 +365,25 @@ def quotient_components(
     the cap defer. ``collect_cap=None`` always defers (the loop-forced
     regime measured ×0.85 even organically).
 
-    ``star_count`` (r13, VERDICT item 2): the dispatch count, supplied
-    by the caller when it is derivable from frames already materialized
-    for other reasons — for the quotient operators |stars| =
-    |keyed docs| − |reps|, two counts over their existing truncated
-    leaves, so the r12 probe's EAGER materialization of the join-derived
-    stars frame (×1.19 capped organic residual, SCALING.md r12)
-    disappears from the registered paths. The hint is a performance
-    dispatch only — both branches are bit-identical — so an inexact
-    count can never change labels, only which plan computes them. When
-    ``star_count`` is None and ``collect_cap`` is set, the r12 probe
-    (truncate stars + count) runs as before.
+    The star count (r13, VERDICT item 2) comes from ``reps``, the
+    caller's truncated quotient leaf with one row per clique and its
+    member count in ``_csize``: every keyed doc is either its clique's
+    min (a rep) or a star member, so |stars| = Σ ``_csize`` − |reps|,
+    ONE aggregate over a leaf the operator already materializes for
+    reuse — no eager materialization of the join-derived stars frame
+    (the r12 probe's ×1.19 capped organic residual, SCALING.md r12).
+    The identity assumes doc ids are unique (the documents-table
+    contract); duplicate ids only OVERESTIMATE the count — biasing
+    dispatch toward the deferred (safe) branch, where
+    connected_components re-probes the real edge count before any
+    collect. The count is a performance dispatch only — both branches
+    are bit-identical — so an inexact count can never change labels,
+    only which plan computes them (r14, ADVICE).
 
     Returned frame is a self-contained leaf on every branch (r13):
     the deferred path eagerly truncates its output union, which is what
     lets this function release its working leaves (``sj``, the rep
-    labels, a probe-owned stars leaf) instead of accumulating
+    labels) instead of accumulating
     corpus-scale block sets per call in a long-lived session (r12
     ADVICE). The output leaf itself follows the connected_components
     convention: it belongs to the caller.
@@ -377,24 +392,15 @@ def quotient_components(
     # stages (member join + self-rep distinct), which at TINY star
     # counts costs more than it saves — only copy-heavy corpora (the
     # regime the deferral exists for) defer.
-    owned_stars: DataFrame | None = None
     if collect_cap is not None:
-        if star_count is None:
-            # lazy leaf + count = one blocking job, not two (r15 —
-            # the count materializes the checkpoint it probes)
-            stars = operator_leaf(stars, False)
-            owned_stars = stars
-            star_count = stars.count()
+        row = reps.agg(
+            F.sum("_csize").alias("k"), F.count(F.lit(1)).alias("r")
+        ).collect()[0]
+        star_count = int(row.k or 0) - int(row.r)
         if star_count <= collect_cap:
-            out = connected_components(
+            return connected_components(
                 rep_pairs.unionByName(stars), collect_cap=collect_cap
             )
-            # out is self-contained (connected_components truncates its
-            # output or collects it), so the probe's stars leaf is no
-            # longer reachable — release instead of leaking per call
-            if owned_stars is not None:
-                _release_plan_blocks(owned_stars)
-            return out
     rep_labels = connected_components(rep_pairs, collect_cap=collect_cap)
     rl = rep_labels.select(
         F.col("node").alias("id_a"), F.col("component").alias("_c")
@@ -422,6 +428,4 @@ def quotient_components(
     # O(star-edges) blocks per *_dup_groups call for the session's life)
     _release_plan_blocks(sj)
     _release_plan_blocks(rep_labels)
-    if owned_stars is not None:
-        _release_plan_blocks(owned_stars)
     return out

@@ -127,8 +127,6 @@ def dedup_batch_against_index(
     bands: int = 32,
     id_col: str = "doc_id",
     text_col: str = "text",
-    stage_clock: dict | None = None,
-    truncate_stages: bool = True,
     batch_index: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Accept the subset of ``new_docs`` that duplicates neither the
@@ -170,22 +168,7 @@ def dedup_batch_against_index(
     release rely on driver GC + ContextCleaner, which eventually
     reclaims the (batch-sized, never corpus-sized) sets once the
     frames are collected.
-
-    ``stage_clock`` (r10, diagnosis-only): when a dict is passed, each
-    stage-boundary checkpoint is FORCED (one count) and its wall time
-    recorded under the stage's name — the per-stage instrument for
-    chasing sweep-to-sweep variance (SCALING.md r10). Forcing changes
-    only WHEN the lazy checkpoints materialize, not what they hold, so
-    the output is identical; leave None in production paths.
     """
-    import time as _time
-
-    def _tick(df: DataFrame, name: str) -> None:
-        if stage_clock is not None:
-            t0 = _time.time()
-            df.count()
-            stage_clock[name] = round(_time.time() - t0, 3)
-
     # operator_leaf (r14, VERDICT item 2): every stage-boundary
     # truncation in this pipeline honors the durable-checkpoint conf —
     # on a real cluster with spark.etl_school.checkpoint_dir set, an
@@ -210,7 +193,6 @@ def dedup_batch_against_index(
                 f"build_dedup_index's {sorted(want)}"
             )
         new_idx = batch_index
-    _tick(new_idx, "s1_batch_index")
 
     # 1a. exact vs history: fingerprint anti-join
     surv = new_idx.join(index.select("fp"), "fp", "left_anti")
@@ -241,11 +223,9 @@ def dedup_batch_against_index(
     # no-truncate 14.74 s — the per-stage toRdd cost (~8 s of codegen
     # compile + broadcast builds)
     # is still CHEAPER than the multiplied re-analysis + re-execution
-    # of the untruncated tree across the pipeline's actions, so the
-    # truncation default stands (truncate_stages=True).
-    if truncate_stages:
-        surv = operator_leaf(surv)
-    _tick(surv, "s2_exact")
+    # of the untruncated tree across the pipeline's actions, so every
+    # stage boundary is truncated.
+    surv = operator_leaf(surv)
 
     # 2. near-dup vs history: band new + stored signatures, bucket-join,
     # exact-Jaccard verify on stored shingle sets; any verified match
@@ -258,13 +238,8 @@ def dedup_batch_against_index(
         .select(F.col("new_doc").alias("doc"))
         .distinct()
     )
-    surv2 = surv.join(matched, "doc", "left_anti")
-    if truncate_stages:
-        surv2 = operator_leaf(surv2)
-        ckpts = [new_idx, surv, surv2]
-    else:
-        ckpts = [new_idx]
-    _tick(surv2, "s3_history_near")
+    surv2 = operator_leaf(surv.join(matched, "doc", "left_anti"))
+    ckpts = [new_idx, surv, surv2]
     surv = surv2
 
     # 3. near-dup within the surviving batch: pair + components + min-id
@@ -279,24 +254,11 @@ def dedup_batch_against_index(
     pairs = verify_jaccard_pairs(pcands, surv, surv, threshold).select(
         "id_a", "id_b"
     )
-    if stage_clock is not None and truncate_stages:
-        # split the in-batch stage for the variance instrument: the
-        # pair+verify pipeline (forced here — checkpointed so the
-        # components stage reuses the materialization instead of
-        # re-executing) vs the components labeling itself
-        pairs = operator_leaf(pairs)
-        # register the diagnostic checkpoint so release_batch_checkpoints
-        # frees it with the batch (r11: it previously leaked to GC)
-        ckpts.append(pairs)
-        _tick(pairs, "s3b_pairs_verify")
     # batch-sized edge sets are far under the cap in any sane ingestion
     # config, so the within-batch components resolve driver-side in one
     # collect; a mass-duplicated batch past the cap falls back to the
     # distributed loop (cluster.py collect_cap docstring)
-    t_cc = _time.time()
     labels = connected_components(pairs, collect_cap=1_000_000)
-    if stage_clock is not None:
-        stage_clock["s3c_components"] = round(_time.time() - t_cc, 3)
     losers = labels.filter(F.col("node") != F.col("component")).select(
         F.col("node").alias("doc")
     )

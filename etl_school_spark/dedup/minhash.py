@@ -398,8 +398,8 @@ def minhash_dup_groups(
     # rule cannot see through an agg-fused build side) and the band +
     # verify stages reuse the materialized quotient — measured rationale
     # in ngram.ngram_dup_groups / tools/ab_megaclique.py (r12)
-    # _csize (r13): per-clique count so the dispatch below is one tiny
-    # aggregate over this leaf, not a corpus-scale count (ngram rationale)
+    # _csize (r13): per-clique count, so quotient_components' star count
+    # is one tiny aggregate over this leaf (ngram rationale)
     reps = operator_leaf(
         keyed.groupBy("_setkey")
         .agg(F.min("doc").alias("_rep"), F.count(F.lit(1)).alias("_csize"))
@@ -430,21 +430,10 @@ def minhash_dup_groups(
     rep_pairs = verify_jaccard_pairs(cands, rep_sets, rep_sets, threshold).select(
         "id_a", "id_b"
     )
-    # dispatch count without materializing the stars frame (r13, VERDICT
-    # item 2): |stars| = Σ clique sizes − |reps| — one aggregate over
-    # the reps leaf (rationale in ngram.ngram_dup_groups)
-    star_count = None
-    if collect_cap is not None:
-        row = reps.agg(
-            F.sum("_csize").alias("k"), F.count(F.lit(1)).alias("r")
-        ).collect()[0]
-        star_count = int(row.k or 0) - int(row.r)
     # components over the REP graph only; star members inherit their
     # rep's label in one skew-splittable join (r12 — the loop no longer
     # scales with the duplication factor; cluster.quotient_components)
-    labels = quotient_components(
-        rep_pairs, stars, collect_cap=collect_cap, star_count=star_count
-    )
+    labels = quotient_components(rep_pairs, stars, reps, collect_cap=collect_cap)
     if with_singletons:
         # (r12) full dedup table: (doc, doc) for every nonempty-set doc
         # with no verified near-duplicate

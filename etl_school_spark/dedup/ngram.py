@@ -268,10 +268,10 @@ def ngram_dup_groups(
     # 2. reuse — the star join AND the PPJoin's four references
     #    (postings, frequency ranking, both verify sides) read the
     #    materialized quotient instead of re-deriving the groupBy.
-    # _csize (r13): per-clique membership count, carried so the dispatch
-    # count below is ONE tiny aggregate over this leaf instead of a
-    # corpus-scale count of keyed — pruned out of every downstream join
-    # by the explicit selects
+    # _csize (r13): per-clique membership count, carried so
+    # quotient_components' star count is ONE tiny aggregate over this
+    # leaf instead of a corpus-scale count of keyed — pruned out of
+    # every downstream join by the explicit selects
     reps = operator_leaf(
         keyed.groupBy("_setkey")
         .agg(F.min("doc").alias("_rep"), F.count(F.lit(1)).alias("_csize"))
@@ -287,31 +287,12 @@ def ngram_dup_groups(
         F.size("_setkey").alias("set_size"),
     )
     rep_pairs = _jaccard_pairs_from_sets(rep_sets, threshold).select("id_a", "id_b")
-    # dispatch count without materializing the stars frame (r13, VERDICT
-    # item 2): every keyed doc is either its clique's min (a rep) or a
-    # star member, so |stars| = Σ clique sizes − |reps| — ONE aggregate
-    # over the reps leaf this operator already truncates for reuse,
-    # replacing the r12 probe's eager checkpoint of the join-derived
-    # stars frame (its ×1.19 capped organic residual, SCALING.md r12).
-    # The identity assumes doc ids are unique (the documents-table
-    # contract); duplicate ids only OVERESTIMATE the count — biasing
-    # dispatch toward the deferred (safe) branch, where
-    # connected_components re-probes the real edge count before any
-    # collect — so labels are unaffected either way (r14, ADVICE)
-    star_count = None
-    if collect_cap is not None:
-        row = reps.agg(
-            F.sum("_csize").alias("k"), F.count(F.lit(1)).alias("r")
-        ).collect()[0]
-        star_count = int(row.k or 0) - int(row.r)
     # components over the REP graph only; star members inherit their
     # rep's label in one skew-splittable join (r12 — the iterative loop
     # no longer scales with the duplication factor, and the capped
     # driver fast path re-engages on copy-heavy corpora; exactness
-    # argument in cluster.quotient_components)
-    labels = quotient_components(
-        rep_pairs, stars, collect_cap=collect_cap, star_count=star_count
-    )
+    # argument and the star count in cluster.quotient_components)
+    labels = quotient_components(rep_pairs, stars, reps, collect_cap=collect_cap)
     if with_singletons:
         # ``with_singletons`` (r12): emit (doc, doc) for every
         # in-contract doc (nonempty set) with no near-duplicate — the

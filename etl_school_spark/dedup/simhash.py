@@ -30,6 +30,14 @@ from pyspark.sql import functions as F
 from etl_school_spark.dedup.cluster import operator_leaf
 from etl_school_spark.functions.text import _signed64, simhash64_packed
 
+#: refine_threshold="auto": chunk buckets past HOT_THRESHOLD members are
+#: the hot ones; a sampled verify pass-rate below REFINE_PASS_CUTOFF
+#: means they are boilerplate and refinement pays; the sample holds
+#: ≤ ~4 × PROBE_ROWS hot-bucket rows (_hot_bucket_pass_rate).
+HOT_THRESHOLD = 2000
+REFINE_PASS_CUTOFF = 0.2
+PROBE_ROWS = 256
+
 
 def _chunk_masks(chunks: int) -> list[int]:
     chunk_size = 64 // chunks
@@ -116,7 +124,6 @@ def _hot_bucket_pass_rate(
     ids: DataFrame,
     hot_threshold: int,
     max_hamming: int,
-    probe_rows: int = 256,
 ) -> float | None:
     """MEASURE the refinement enable signal (r10): the fraction of
     hot-bucket candidate pairs that would PASS the hamming verify.
@@ -127,8 +134,8 @@ def _hot_bucket_pass_rate(
     true duplicate clusters (pairs pass; the explode is pure overhead).
     This probe samples hot-bucket members with a deterministic hash gate
     (the knn.lsh_candidate_density pattern — no RNG, same sample every
-    run), collects ≤ ~4×probe_rows skinny (bucket, signature) rows, and
-    computes the pairwise pass-rate driver-side (≤ probe_rows² word ops).
+    run), collects ≤ ~4×PROBE_ROWS skinny (bucket, signature) rows, and
+    computes the pairwise pass-rate driver-side (≤ PROBE_ROWS² word ops).
     Returns None when no bucket exceeds ``hot_threshold`` (nothing to
     refine) or the gated sample yields no within-bucket pair."""
     sizes = ids.groupBy("t", "key").agg(F.count(F.lit(1)).alias("_bsz"))
@@ -136,9 +143,9 @@ def _hot_bucket_pass_rate(
     total = hot.agg(F.sum("_bsz")).first()[0]
     if total is None:
         return None
-    rate = min(1.0, probe_rows / float(total))
+    rate = min(1.0, PROBE_ROWS / float(total))
     # clamp the gate ≥ 1: at extreme hot-bucket mass (total >
-    # probe_rows × 1e6 — the massive-boilerplate regime the dispatch
+    # PROBE_ROWS × 1e6 — the massive-boilerplate regime the dispatch
     # exists for) an unclamped int(rate × 1e6) truncates to 0 and the
     # sample goes empty, silently disabling refinement where it matters
     # most (r10 review). The limit below keeps the sample bounded even
@@ -164,7 +171,7 @@ def _hot_bucket_pass_rate(
             "doc",
         )
         .orderBy("_r", "doc", "t", "key")
-        .limit(4 * probe_rows)
+        .limit(4 * PROBE_ROWS)
         .collect()
     )
     groups: dict = {}
@@ -190,10 +197,6 @@ def simhash_near_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     refine_threshold: int | str | None = None,
-    hot_threshold: int = 2000,
-    refine_pass_cutoff: float = 0.2,
-    probe_rows: int = 256,
-    force_reprobe: bool = False,
     sigs: DataFrame | None = None,
 ) -> DataFrame:
     """All pairs (i < j) with SimHash hamming distance ≤ max_hamming.
@@ -236,18 +239,18 @@ def simhash_near_pairs(
 
     ``refine_threshold="auto"`` (r10): the census-driven dispatch the
     r9 SCALING entry left manual. One bucket-size census finds buckets
-    past ``hot_threshold``; if any exist, a deterministic bounded
+    past HOT_THRESHOLD; if any exist, a deterministic bounded
     sample of their members measures the verify PASS-RATE
-    (_hot_bucket_pass_rate). Pass-rate < ``refine_pass_cutoff`` means
+    (_hot_bucket_pass_rate). Pass-rate < REFINE_PASS_CUTOFF means
     the hot mass is boilerplate (the regime where refinement measured
-    ×0.80 at sf0.1) → refine at ``hot_threshold``; otherwise
+    ×0.80 at sf0.1) → refine at HOT_THRESHOLD; otherwise
     (true-duplicate hot buckets — the regime where it measured ×2.4
     WORSE at sf1) or no hot buckets at all → the plain single-join
-    plan. The probe is memoized per (input plan, params) for the
-    session — the dispatch.cosine_pairs_auto pattern — so repeated
-    runs pay it once. Either choice is output-exact (the refinement
-    exactness argument above), so the dispatch changes the PLAN, never
-    the answer — same oracle either way.
+    plan. The probe is memoized per (input plan, params) in the one
+    probe memo (tables.memoized_probe), so repeated runs pay it once.
+    Either choice is output-exact (the refinement exactness argument
+    above), so the dispatch changes the PLAN, never the answer — same
+    oracle either way.
     """
     if max_hamming >= chunks:
         raise ValueError("pigeonhole blocking needs max_hamming < chunks")
@@ -261,8 +264,7 @@ def simhash_near_pairs(
     ids = simhash_chunk_rows(docs, chunks, id_col, text_col, sigs=sigs)
     if refine_threshold == "auto":
         refine_threshold = _resolve_refine_auto(
-            docs, ids, max_hamming, chunks, id_col, text_col,
-            hot_threshold, refine_pass_cutoff, probe_rows, force_reprobe,
+            docs, ids, max_hamming, chunks, id_col, text_col, "pairs"
         )
     return _verified_pairs(ids, max_hamming, chunks, refine_threshold)
 
@@ -274,55 +276,39 @@ def _resolve_refine_auto(
     chunks: int,
     id_col: str,
     text_col: str,
-    hot_threshold: int,
-    refine_pass_cutoff: float,
-    probe_rows: int,
-    force_reprobe: bool,
-    variant: str = "pairs",
+    variant: str,
 ) -> int | None:
     """The census-driven refinement dispatch (r10), shared by
     simhash_near_pairs and simhash_dup_groups: measure the hot-bucket
     verify pass-rate on a deterministic bounded sample, memoized per
-    (input plan, params, variant) for the session. ``plan_key_df`` must
-    be a STABLE plan across warm calls (the caller's docs frame — NOT a
-    per-call localCheckpoint derivative, whose LogicalRDD hash changes
-    every call and would defeat the memo); ``variant`` discriminates
-    the two bucket distributions (full chunk rows vs quotient reps) so
-    they never reuse each other's probe.
+    (input plan, params, variant) in tables.memoized_probe.
+    ``plan_key_df`` must be a STABLE plan across warm calls (the
+    caller's docs frame — NOT a per-call localCheckpoint derivative,
+    whose LogicalRDD hash changes every call and would defeat the
+    memo); ``variant`` ("pairs" or "groups") discriminates the two
+    bucket distributions (full chunk rows vs quotient reps) so they
+    never reuse each other's probe.
 
     CONTRACT at the ``sigs=`` injection sites (r12, ADVICE): an
     injected signature frame MUST derive from the same
     (docs, id_col, text_col) the memo is keyed on — the probed bucket
     distribution comes from the injected frame, so a caller violating
     the documented derivation contract would mis-key the memo entry.
-    Both refinement choices are output-exact (a bad entry can only
-    mis-price, never corrupt), and the standard injection
-    (a per-call localCheckpoint of the same scan, dedupops.py) cannot
-    carry a stable hash of its own — so the contract is asserted here
-    rather than mixed into the key."""
-    spark = plan_key_df.sparkSession
-    memo = getattr(spark, "_esp_simhash_refine_memo", None)
-    if memo is None:
-        memo = {}
-        spark._esp_simhash_refine_memo = memo
-    key = (
-        plan_key_df._jdf.queryExecution().analyzed().semanticHash(),
-        variant,
-        max_hamming, chunks, id_col, text_col,
-        hot_threshold, probe_rows,
+    Both refinement choices are output-exact (a bad or stale entry can
+    only mis-price, never corrupt or fail — so, unlike the dense cap in
+    dispatch.cosine_pairs_auto, no eviction path is needed), and the
+    standard injection (a per-call localCheckpoint of the same scan,
+    dedupops.py) cannot carry a stable hash of its own — so the
+    contract is asserted here rather than mixed into the key."""
+    from etl_school_spark.tables import memoized_probe
+
+    rate = memoized_probe(
+        plan_key_df,
+        f"simhash_refine_{variant}",
+        (max_hamming, chunks, id_col, text_col, HOT_THRESHOLD, PROBE_ROWS),
+        lambda: _hot_bucket_pass_rate(ids, HOT_THRESHOLD, max_hamming),
     )
-    # force_reprobe: the staleness escape the memoized-probe pattern
-    # prescribes (dispatch.cosine_pairs_auto) — callers that mutate
-    # table content under an unchanged analyzed plan bypass and
-    # overwrite the entry. (No automatic eviction path is needed
-    # here: unlike the dense cap, BOTH refinement choices are
-    # output-exact, so a stale entry can only mis-price, never fail.)
-    if force_reprobe or key not in memo:
-        memo[key] = _hot_bucket_pass_rate(
-            ids, hot_threshold, max_hamming, probe_rows
-        )
-    rate = memo[key]
-    return hot_threshold if rate is not None and rate < refine_pass_cutoff else None
+    return HOT_THRESHOLD if rate is not None and rate < REFINE_PASS_CUTOFF else None
 
 
 def _verified_pairs(
@@ -440,9 +426,6 @@ def simhash_dup_groups(
     id_col: str = "doc_id",
     text_col: str = "text",
     refine_threshold: int | str | None = "auto",
-    hot_threshold: int = 2000,
-    refine_pass_cutoff: float = 0.2,
-    probe_rows: int = 256,
     collect_cap: int | None = 1_000_000,
     sigs: DataFrame | None = None,
     with_singletons: bool = False,
@@ -524,9 +507,9 @@ def simhash_dup_groups(
     # skewed probe partition splits (measured in tools/ab_megaclique.py
     # for the set-key twin of this join). Also reused by the chunk
     # explode below.
-    # _csize (r13): per-clique count so the dispatch below is one tiny
-    # aggregate over this leaf, not a corpus-scale count of sigs —
-    # pruned out of the star join and the chunk explode by their
+    # _csize (r13): per-clique count, so quotient_components' star count
+    # is one tiny aggregate over this leaf, not a corpus-scale count of
+    # sigs — pruned out of the star join and the chunk explode by their
     # explicit selects (ngram rationale)
     reps = operator_leaf(
         sigs_nn.groupBy("_sig")
@@ -544,30 +527,15 @@ def simhash_dup_groups(
         # per-call localCheckpoint — changed hash every call, so the
         # probe re-ran on every warm invocation)
         refine_threshold = _resolve_refine_auto(
-            docs, rep_ids, max_hamming, chunks, id_col, text_col,
-            hot_threshold, refine_pass_cutoff, probe_rows, False,
-            variant="groups",
+            docs, rep_ids, max_hamming, chunks, id_col, text_col, "groups"
         )
     rep_pairs = _verified_pairs(rep_ids, max_hamming, chunks, refine_threshold)
-    # dispatch count without materializing the stars frame (r13, VERDICT
-    # item 2): every non-null-sig doc is either its signature clique's
-    # min (a rep) or a star member, so |stars| = Σ clique sizes −
-    # |reps| — one aggregate over the reps leaf (rationale in
-    # ngram.ngram_dup_groups)
-    star_count = None
-    if collect_cap is not None:
-        row = reps.agg(
-            F.sum("_csize").alias("k"), F.count(F.lit(1)).alias("r")
-        ).collect()[0]
-        star_count = int(row.k or 0) - int(row.r)
     # components over the REP graph only; star members inherit their
     # rep's label in one skew-splittable join (r12 — the loop no longer
-    # scales with the duplication factor; cluster.quotient_components)
+    # scales with the duplication factor; cluster.quotient_components,
+    # which also counts the stars from the reps leaf's _csize)
     labels = quotient_components(
-        rep_pairs.select("id_a", "id_b"),
-        stars,
-        collect_cap=collect_cap,
-        star_count=star_count,
+        rep_pairs.select("id_a", "id_b"), stars, reps, collect_cap=collect_cap
     )
     if with_singletons:
         # (r12) full dedup table: (doc, doc) for every doc with no

@@ -6,10 +6,8 @@ selection, top-K). No collects, no RDDs.
 """
 
 from etl_school_spark.operators.aggregates import (  # noqa: F401
-    davg,
     dsum,
     having,
-    null_profile,
     ratio_to_total,
 )
 from etl_school_spark.operators.joins import (  # noqa: F401

@@ -3,7 +3,7 @@
 Money/measure aggregation policy: sums of doubles are order-dependent in
 the last ULPs (both Spark and any oracle engine sum in nondeterministic
 partition order), so all financial aggregates here go through exact
-decimal arithmetic (`dsum`/`davg`): cast each value to a fixed-scale
+decimal arithmetic (`dsum`): cast each value to a fixed-scale
 decimal, sum exactly (associative), then cast the exact result to double.
 This makes results bit-identical across engines and across partitionings —
 which also means the engine's own results are reproducible run-to-run at
@@ -22,28 +22,11 @@ def dsum(col: str | Column, scale: int = 2, precision: int = 18) -> Column:
     return F.sum(c.cast(f"decimal({precision},{scale})")).cast("double")
 
 
-def davg(col: str | Column, count_col: Column | None = None, scale: int = 2) -> Column:
-    """Exact-sum average: decimal sum cast to double, divided by count."""
-    c = F.col(col) if isinstance(col, str) else col
-    n = count_col if count_col is not None else F.count(c)
-    return dsum(c, scale=scale) / n
-
-
 def having(df: DataFrame, group_cols: list[str], agg_col: Column, pred) -> DataFrame:
     """A8: GROUP BY … HAVING (A4:738-742 duplicate detection) —
     groupBy + agg + filter; Catalyst folds the filter into the agg."""
     agged = df.groupBy(*group_cols).agg(agg_col)
     return agged.filter(pred)
-
-
-def null_profile(df: DataFrame, cols: list[str]) -> DataFrame:
-    """A7: per-column null counts via conditional aggregation
-    (A4:749-756 ``sum(case when x is null then 1 else 0 end)``)."""
-    aggs = [
-        F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"null_{c}")
-        for c in cols
-    ]
-    return df.agg(F.count(F.lit(1)).alias("n_rows"), *aggs)
 
 
 def ratio_to_total(
@@ -62,9 +45,3 @@ def ratio_to_total(
     total = F.sum(F.col(count_alias)).over(Window.partitionBy())
     return agged.withColumn(pct_alias, F.round(100.0 * F.col(count_alias) / total, 2))
 
-
-def time_bucket(
-    df: DataFrame, ts_col: str, unit: str = "hour", alias: str = "bucket"
-) -> DataFrame:
-    """A11: time-bucketed grouping key (A4:924-930 ``date_trunc('hour',…)``)."""
-    return df.withColumn(alias, F.date_trunc(unit, F.col(ts_col)))

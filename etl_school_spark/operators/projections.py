@@ -27,18 +27,6 @@ def json_path(col: str | Column, path: str, cast: str | None = None) -> Column:
     return c
 
 
-def flatten_struct(df: DataFrame, struct_col: str, fields: dict[str, str]) -> DataFrame:
-    """P2/P3: project nested struct fields to top-level typed columns.
-
-    ``fields`` maps nested field path (under struct_col) -> output alias.
-    Mirrors the A5 dashboard's ``addr["street_address"].alias(...)`` shape
-    (streamlit_buy_orders_app.py:24-46).
-    """
-    cols = [F.col(f"{struct_col}.{path}").alias(alias) for path, alias in fields.items()]
-    others = [F.col(c) for c in df.columns if c != struct_col]
-    return df.select(*others, *cols)
-
-
 def search_predicate(query: str, columns: list[str]) -> Column:
     """P7's predicate: ``query`` as a case-insensitive substring of any of
     ``columns`` (A5:102-111 ``ILIKE '%q%'`` over name/email/phone/rfid)."""
@@ -50,8 +38,3 @@ def multi_column_search(df: DataFrame, query: str, columns: list[str]) -> DataFr
     """P7: OR-chained case-insensitive substring search across columns."""
     return df.filter(search_predicate(query, columns))
 
-
-def select_columns(df: DataFrame, columns: list[str]) -> DataFrame:
-    """P11: user-driven column pruning (A5:322-337). Catalyst pushes the
-    pruned schema all the way into the parquet scan (ReadSchema)."""
-    return df.select(*[F.col(c) for c in columns])

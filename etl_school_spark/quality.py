@@ -44,15 +44,6 @@ def dq_metrics(df: DataFrame, rules: list[DqRule], group: str = "dq") -> DataFra
     )
 
 
-def null_and_dup_profile(df: DataFrame, key_col: str, cols: list[str]) -> DataFrame:
-    """Duplicate + null profiling in one pass (A4:738-756)."""
-    aggs = [
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct(key_col).alias("n_distinct_keys"),
-    ] + [F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"null_{c}") for c in cols]
-    return df.agg(*aggs)
-
-
 def run_dq(
     spark: SparkSession,
     df: DataFrame,

@@ -13,7 +13,7 @@ distance that matters to a coarse quantizer, and integer accumulators
 are also the cheap path at 100 TB (no decimal widening in the shuffle).
 
 Search: a query probes only its ``nprobe`` nearest cells; candidates are
-the corpus vectors in those cells (a cell-key equi-join, NOT a cross
+the corpus vectors in those cells (a per-cell cogroup, NOT a cross
 join), then exact cosine + per-query top-k. At 100 TB the corpus is
 partitioned by cell id, so a probe touches nprobe/n_cells of the data.
 """
@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from etl_school_spark.functions.vectors import as_double, dot, l2_norm
+from etl_school_spark.functions.vectors import as_double, l2_norm
 
 
 def _sq_dist(vec_col: Column, centroid: list[float]) -> Column:
@@ -78,8 +78,12 @@ def _sq_dists_matrix(V: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
 
 #: cells per BLAS tile in _assign_cells — bounds per-task numpy peak at
 #: O(arrow_batch_rows × chunk) float64 independent of n_cells (the same
-#: role cell_block plays in gemm.blocked_shortlist_scores)
+#: role CELL_BLOCK plays in gemm.blocked_shortlist_scores)
 _ASSIGN_CELL_CHUNK = 256
+
+#: ivf_topk: corpus rows per BLAS tile of a cell's scorer — per-task numpy
+#: peak O(|probing queries| × CELL_BLOCK) (gemm.blocked_shortlist_scores)
+CELL_BLOCK = 4096
 
 
 def _assign_cells(V: "np.ndarray", C: "np.ndarray") -> "np.ndarray":
@@ -556,30 +560,22 @@ def ivf_topk(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    verify: str = "gemm",
-    cell_block: int = 4096,
 ) -> DataFrame:
     """Approximate top-k cosine neighbors via IVF probing.
 
     Same output contract as brute_force_topk / lsh_topk:
     (query_id, neighbor_id, score, rank).
 
-    ``verify`` picks the physical form of the probe-scoring stage — the
-    ANSWER is identical (bit-for-bit; both emit exact sequential-fold
-    scores over the same candidate set, so the same oracle passes):
-
-    - "gemm" (default, the FAISS IVF-Flat physical form): cogroup the
-      probing queries and the cell members per cell, one BLAS product
-      per cell shortlists, exact rescore emits (the gemm.py pattern).
-      r9: the cell's corpus side is block-tiled in ``cell_block``
-      slices (gemm.blocked_shortlist_scores — the same bound as
-      lsh_topk buckets), so per-task numpy allocation is
-      O(|probing queries| × cell_block) even when a cell outgrows the
-      n_cells ≈ √corpus sizing rule; the Arrow-deserialized group frame
-      itself remains cell-sized (inherent to cogroup applyInPandas).
-    - "sql": the declarative cell equi-join + per-candidate fold — no
-      per-group memory contract at all; the fallback when cells are
-      unboundedly skewed.
+    The probe-scoring stage is the FAISS IVF-Flat physical form: cogroup
+    the probing queries and the cell members per cell, one BLAS product
+    per cell shortlists, exact rescore emits (the gemm.py pattern) —
+    exact sequential-fold scores, so the ``ann_topk_ivf`` oracle checks
+    them bit-for-bit. r9: the cell's corpus side is block-tiled in
+    CELL_BLOCK slices (gemm.blocked_shortlist_scores — the same bound
+    as lsh_topk buckets), so per-task numpy allocation is
+    O(|probing queries| × CELL_BLOCK) even when a cell outgrows the
+    n_cells ≈ √corpus sizing rule; the Arrow-deserialized group frame
+    itself remains cell-sized (inherent to cogroup applyInPandas).
 
     Broadcast-lifecycle note: unlike gemm_topk/cosine_pairs_dense, the
     trained centroids ship as Catalyst LITERALS (n_cells × dim constant
@@ -595,14 +591,12 @@ def ivf_topk(
     centroids = train_centroids(corpus, n_cells, iters, id_col, vec_col)
 
     # norms AND the double-cast arrays are computed ONCE per vector on
-    # each side, BEFORE the join — the candidate join fans a query out to
-    # ~nprobe/n_cells of the corpus, and evaluating l2_norm / as_double
-    # per candidate row (the plain cosine() form) multiplied the fold
-    # work on the join output (measured the dominant cost at sf1: 6 M
-    # candidate rows). The projected columns materialize into the
-    # shuffle, so the join output only pays the one product fold.
-    # dot/(nq·nc) is value-identical to cosine() — same fold order — so
-    # the oracle needs no change.
+    # each side, BEFORE the cogroup — a query meets ~nprobe/n_cells of
+    # the corpus, and evaluating l2_norm / as_double per candidate (the
+    # plain cosine() form) multiplied the fold work (measured the
+    # dominant cost at sf1: 6 M candidate rows). dot/(nq·nc) is
+    # value-identical to cosine() — same fold order — so the oracle
+    # needs no change.
     cvd = as_double(F.col(vec_col))
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
@@ -627,18 +621,7 @@ def ivf_topk(
         "query_id", "qv", "_nq", F.explode(pc(F.col("qv"))).alias("cell")
     )
 
-    if verify == "gemm":
-        scored = _cogroup_gemm_scores(probes, c, k, cell_block)
-    elif verify == "sql":
-        cands = probes.join(c, "cell").filter(
-            F.col("query_id") != F.col("neighbor_id")
-        )
-        scored = cands.withColumn(
-            "score_raw",
-            dot(F.col("qv"), F.col("cv")) / (F.col("_nq") * F.col("_nc")),
-        )
-    else:
-        raise ValueError(f"verify must be 'gemm' or 'sql', got {verify!r}")
+    scored = _cogroup_gemm_scores(probes, c, k)
     w = Window.partitionBy("query_id").orderBy(F.desc("score_raw"), "neighbor_id")
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -647,9 +630,7 @@ def ivf_topk(
     )
 
 
-def _cogroup_gemm_scores(
-    probes: DataFrame, c: DataFrame, k: int, cell_block: int = 4096
-) -> DataFrame:
+def _cogroup_gemm_scores(probes: DataFrame, c: DataFrame, k: int) -> DataFrame:
     """Per-cell BLAS scoring of probing queries against cell members:
     cogroup on cell, block-tiled gemm over normalized copies to
     SHORTLIST (per-block local top-(k+1) per query with a
@@ -657,7 +638,7 @@ def _cogroup_gemm_scores(
     with knn.lsh_topk's bucket scorer), then emit the exact score — the
     JVM-computed norms ride in (_nq/_nc) and the dot is a strict
     left-to-right column fold (gemm._seq_fold_sum), so emitted doubles
-    are bit-identical to the declarative verify and to the oracle.
+    are bit-identical to the oracle's declarative fold.
     Self-matches survive to the SQL-side filter, exactly as in
     gemm.gemm_topk."""
     import pandas as pd  # noqa: F401 — applyInPandas dependency
@@ -665,9 +646,10 @@ def _cogroup_gemm_scores(
     from etl_school_spark.similarity.gemm import blocked_shortlist_scores
 
     local_k = k + 1
+    block = CELL_BLOCK
 
     def score(qdf, cdf):
-        return blocked_shortlist_scores(qdf, cdf, local_k, cell_block)
+        return blocked_shortlist_scores(qdf, cdf, local_k, block)
 
     out = (
         probes.groupBy("cell")

@@ -162,13 +162,18 @@ def _auto_bits(n: int, tables: int, target_bucket: int) -> int:
     ≤ target_bucket (clamped to [1, 64 // tables] — the pool packs
     tables × bits sign bits into one 64-bit word). Keeps per-bucket
     work CONSTANT-sized as the corpus grows: the complementary bound to
-    corpus_block tiling (which caps allocations; this caps the Arrow
+    CORPUS_BLOCK tiling (which caps allocations; this caps the Arrow
     group itself). More bits lowers per-table recall — compensate with
     tables, which the cap ties into the same 64-bit budget."""
     import math
 
     want = math.ceil(math.log2(max(2.0, n / max(1, target_bucket))))
     return max(1, min(64 // tables, want))
+
+
+#: lsh_topk: corpus rows per BLAS tile of a bucket's scorer, and the
+#: bucket membership bits="auto" targets
+CORPUS_BLOCK = 4096
 
 
 def lsh_topk(
@@ -182,7 +187,6 @@ def lsh_topk(
     vec_col: str = "embedding",
     seed: int = 7,
     query_filter: F.Column | None = None,
-    corpus_block: int = 4096,
 ) -> DataFrame:
     """Approximate top-k cosine neighbors via random-hyperplane LSH.
 
@@ -229,10 +233,10 @@ def lsh_topk(
     O(|Qb| × |bucket|) score matrix plus float64 copies of every member
     per task: fine at 20k docs, an OOM/straggler at 100×. The scorer
     therefore iterates the corpus side of each bucket in fixed-size
-    ``corpus_block`` slices (the gemm.cosine_pairs_dense multi-block
+    CORPUS_BLOCK slices (the gemm.cosine_pairs_dense multi-block
     pattern): each block is shortlisted locally — per-query top-(k+1)
     within the block, inclusive _SELECT_MARGIN cut — and rescored
-    exactly, so peak numpy allocation is O(|Qb| × corpus_block) instead
+    exactly, so peak numpy allocation is O(|Qb| × CORPUS_BLOCK) instead
     of O(|Qb| × |bucket|). The per-block shortlist union is a SUPERSET
     of the bucket-wide shortlist (at most k-1 candidates anywhere beat a
     true top-k member, so it survives the local cut of every block that
@@ -245,13 +249,13 @@ def lsh_topk(
     float64/score-matrix copies); past THAT bound, scale ``bits`` with
     log2(corpus) so bucket membership stays constant-sized —
     ``bits="auto"`` does exactly that (one corpus count, then
-    _auto_bits targets ``corpus_block`` members per bucket, capped at
+    _auto_bits targets CORPUS_BLOCK members per bucket, capped at
     64 // tables by the pool-word budget)."""
     from etl_school_spark.tables import fan_out
 
     corpus = fan_out(corpus)  # hyperplane-code scan is pre-shuffle fold work
     if bits == "auto":
-        bits = _auto_bits(corpus.count(), tables, corpus_block)
+        bits = _auto_bits(corpus.count(), tables, CORPUS_BLOCK)
     planes = _hyperplanes(dim, bits, tables, seed)
     flat = [p for t in range(tables) for p in planes[t]]
     mask = (1 << bits) - 1
@@ -300,14 +304,15 @@ def lsh_topk(
     cb = exploded(coded, "neighbor_id", "cv", "_nc")
 
     local_k = k + 1  # self-match survives to the SQL-side filter
+    block = CORPUS_BLOCK
 
     def _bucket_score(qdf, cdf):
         # block-tile the corpus side: per-block local shortlist + exact
-        # rescore — peak allocation O(|Qb| × corpus_block), never
+        # rescore — peak allocation O(|Qb| × CORPUS_BLOCK), never
         # O(|Qb| × |bucket|) (docstring, "Per-bucket memory is BOUNDED")
         from etl_school_spark.similarity.gemm import blocked_shortlist_scores
 
-        return blocked_shortlist_scores(qdf, cdf, local_k, corpus_block)
+        return blocked_shortlist_scores(qdf, cdf, local_k, block)
 
     scored = (
         qb.groupBy("t", "key")

@@ -9,11 +9,10 @@ arXiv:2303.09540), composed from this engine's measured blocks:
 2. one scan assigns every vector its nearest cell and precomputes the
    double-cast array + L2 norm (the ivf_topk projection pattern — the
    pair join below then pays only the product fold per candidate);
-3. within-cell pairwise cosine ≥ threshold → duplicate edges. The join
-   is a declarative cell equi-join (id_a < id_b) — candidate volume is
-   Σ |cell|²/2, governed by the n_cells ≈ √corpus sizing rule, and the
-   rows stream through codegen filters with no per-task group
-   materialization (the ivf "sql" verify form). Cross-cell
+3. within-cell pairwise cosine ≥ threshold → duplicate edges, by
+   per-cell blocked BLAS (integer ids) or a declarative cell equi-join
+   (id_a < id_b) — candidate volume is Σ |cell|²/2, governed by the
+   n_cells ≈ √corpus sizing rule. Cross-cell
    near-duplicates are NOT examined — that is SemDeDup's defining
    approximation (dedup within clusters only), stated in the paper and
    inherited here verbatim;
@@ -61,6 +60,13 @@ from etl_school_spark.similarity.ivf import (
     train_centroids,
 )
 
+#: Expected cell size (n / n_cells) up to which the within-cell pair stage
+#: takes the gemm form — the Arrow group-frame bound (_resolve_pair_form).
+GEMM_CELL_BOUND = 65_536
+#: gemm form: per-cell numpy allocations are O(CELL_BLOCK²)
+#: (gemm.blocked_pair_edges).
+CELL_BLOCK = 4096
+
 
 def _auto_cells(n: int) -> int:
     """Cell-count derivation for ``semantic_dedup(n_cells="auto")``:
@@ -82,15 +88,15 @@ def _resolve_pair_form(
     embs: DataFrame,
     id_col: str,
     n_cells: int,
-    gemm_cell_bound: int,
     n: int | None,
 ) -> tuple[str, int | None]:
-    """The pair_form="auto" decision (unit-tested directly — the pair
-    stage executes eagerly inside connected_components, so the choice
-    is not visible in the output plan): gemm when ids are integral AND
-    the EXPECTED cell size n/n_cells is within the Arrow group-frame
-    bound, else sql. Reuses the n_cells="auto" count when available
-    (one extra count job only for pinned-n_cells integral-id callers)."""
+    """The within-cell pair stage's physical form (unit-tested directly —
+    the pair stage executes eagerly inside connected_components, so the
+    choice is not visible in the output plan): gemm when ids are
+    integral AND the EXPECTED cell size n/n_cells is within
+    GEMM_CELL_BOUND, else sql. Reuses the n_cells="auto" count when
+    available (one extra count job only for pinned-n_cells integral-id
+    callers)."""
     integral = dict(embs.dtypes).get(id_col) in (
         "tinyint", "smallint", "int", "bigint",
     )
@@ -98,7 +104,7 @@ def _resolve_pair_form(
         return "sql", n
     if n is None:
         n = embs.count()
-    form = "gemm" if n / max(1, n_cells) <= gemm_cell_bound else "sql"
+    form = "gemm" if n / max(1, n_cells) <= GEMM_CELL_BOUND else "sql"
     return form, n
 
 
@@ -111,9 +117,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     keep: str = "min_id",
     collect_cap: int = 1_000_000,
-    pair_form: str = "auto",
-    cell_block: int = 4096,
-    gemm_cell_bound: int = 65_536,
     far_rank: str = "sq_l2",
 ) -> DataFrame:
     """SemDeDup over an embedding frame.
@@ -153,20 +156,19 @@ def semantic_dedup(
     documented n^1.5 SemDeDup cost at any scale; pass an int to pin the
     cell count (the oracle-replayed registered shape does).
 
-    ``pair_form`` picks the PHYSICAL form of the within-cell pair stage
-    — the edge set is identical either way (same oracle):
+    The PHYSICAL form of the within-cell pair stage is chosen here
+    (_resolve_pair_form, r10) — the edge set is identical either way
+    (same oracle): gemm when its contracts hold — integer ids AND
+    expected cell size n/n_cells ≤ GEMM_CELL_BOUND (the Arrow
+    group-frame bound; at the n_cells="auto" default this is ⌈√n⌉ by
+    construction, so auto corpora pick gemm up to ~4B vectors) — else
+    sql. Derived from the corpus count already taken for
+    n_cells="auto" (one extra count job only when n_cells is pinned).
+    Expected size, not a census: a skewed hot cell can exceed it —
+    semantic_census is the instrument, and the block tiling caps numpy
+    allocations at O(CELL_BLOCK²) regardless (the group frame itself is
+    the residual, the same applyInPandas caveat as knn.lsh_topk).
 
-    - "auto" (default since r10): gemm when its contracts hold —
-      integer ids AND expected cell size n/n_cells ≤
-      ``gemm_cell_bound`` (the Arrow group-frame bound; at the
-      n_cells="auto" default this is ⌈√n⌉ by construction, so auto
-      corpora pick gemm up to ~4B vectors) — else sql. Derived from
-      the corpus count already taken for n_cells="auto" (one extra
-      count job only when n_cells is pinned). Expected size, not a
-      census: a skewed hot cell can exceed it — semantic_census is the
-      instrument, and the block tiling caps numpy allocations at
-      O(cell_block²) regardless (the group frame itself is the
-      residual, the same applyInPandas caveat as knn.lsh_topk).
     - "sql": the declarative cell equi-join + per-candidate
       HOF fold. No per-group memory contract at all; streams through
       codegen. Each candidate pays an interpreted dim-wide fold.
@@ -177,7 +179,7 @@ def semantic_dedup(
       are bit-identically the SQL form's (differential-tested,
       boundary pairs included). The group frame is cell-sized
       (inherent to applyInPandas; bounded by ⌈√n⌉ cell sizing), numpy
-      allocations are O(cell_block²). Requires INTEGER ids (the edge
+      allocations are O(CELL_BLOCK²). Requires INTEGER ids (the edge
       schema is long/long) — string-id corpora take the "sql" form,
       which is id-type-agnostic. Measured crossover in SCALING.md
       r10 — candidate-heavy cells (pinned small n_cells, large corpora)
@@ -186,10 +188,6 @@ def semantic_dedup(
     if keep not in ("min_id", "farthest", "both"):
         raise ValueError(
             f"keep must be 'min_id', 'farthest' or 'both', got {keep!r}"
-        )
-    if pair_form not in ("auto", "sql", "gemm"):
-        raise ValueError(
-            f"pair_form must be 'auto', 'sql' or 'gemm', got {pair_form!r}"
         )
     if far_rank not in ("sq_l2", "cosine"):
         raise ValueError(
@@ -204,10 +202,7 @@ def semantic_dedup(
     if n_cells == "auto":
         n = embs.count()
         n_cells = _auto_cells(n)
-    if pair_form == "auto":
-        pair_form, n = _resolve_pair_form(
-            embs, id_col, n_cells, gemm_cell_bound, n
-        )
+    form, n = _resolve_pair_form(embs, id_col, n_cells, n)
     centroids = train_centroids(embs, n_cells, iters, id_col, vec_col)
 
     vd = as_double(F.col(vec_col))
@@ -218,20 +213,13 @@ def semantic_dedup(
         _nearest_cell_arrow(centroids)(F.col(vec_col)).alias("cell"),
     )
 
-    if pair_form == "gemm":
+    if form == "gemm":
         from etl_school_spark.similarity.gemm import blocked_pair_edges
 
-        id_type = dict(assigned.dtypes)["vid"]
-        if id_type not in ("tinyint", "smallint", "int", "bigint"):
-            # fail loud at plan time, not as an opaque numpy cast error
-            # inside the Arrow worker (the edge schema is long/long)
-            raise ValueError(
-                f"pair_form='gemm' requires an integer {id_col} "
-                f"(got {id_type}); use pair_form='sql' for string ids"
-            )
+        block = CELL_BLOCK
 
         def _score(pdf):
-            return blocked_pair_edges(pdf, float(threshold), cell_block)
+            return blocked_pair_edges(pdf, float(threshold), block)
 
         edges = assigned.groupBy("cell").applyInPandas(
             _score, schema="id_a long, id_b long"

@@ -142,33 +142,61 @@ def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
     # scan-shaped frames are re-probed on every query construction (the
     # bench's warm lane re-constructs each query per iteration: ~0.8 s
     # of probes per sweep). A frame's partition count is a pure function
-    # of its canonicalized plan + session confs, so memoize per
-    # (application, semantic hash, parallelism). The memo holds partition
-    # COUNTS only — never data. It is not result-neutral, though: a
-    # semanticHash collision (odds ~2^-32 per pair, ≤ 512 entries), or
-    # files under an unchanged path that change within one application,
-    # can flip the repartition decision, and the partition layout it
-    # produces is what partition-sensitive operators see — a seeded
-    # sample() or monotonically_increasing_id would then emit different
-    # rows. The risk is accepted for the probe time it saves.
-    try:
-        key = (df.sparkSession.sparkContext.applicationId, df.semanticHash(), n)
-    except Exception:
-        key = None
-    if key is not None and key in _FANOUT_PROBE_MEMO:
-        k = _FANOUT_PROBE_MEMO[key]
-    else:
-        k = df.rdd.getNumPartitions()
-        if key is not None:
-            if len(_FANOUT_PROBE_MEMO) > 512:
-                _FANOUT_PROBE_MEMO.clear()
-            _FANOUT_PROBE_MEMO[key] = k
+    # of its canonicalized plan + session confs. It is not result-neutral,
+    # though: a semanticHash collision (odds ~2^-32 per pair, ≤ 512
+    # entries), or files under an unchanged path that change within one
+    # application, can flip the repartition decision, and the partition
+    # layout it produces is what partition-sensitive operators see — a
+    # seeded sample() or monotonically_increasing_id would then emit
+    # different rows. The risk is accepted for the probe time it saves.
+    k = memoized_probe(df, "fan_out", (n,), lambda: df.rdd.getNumPartitions())
     if k >= n:
         return df
     return df.repartition(n)
 
 
-_FANOUT_PROBE_MEMO: dict[tuple, int] = {}
+#: The engine's ONE plan-keyed probe memo: fan_out's partition count,
+#: similarity.dispatch's LSH candidate density and dedup.simhash's
+#: hot-bucket pass-rate. Keyed (application id, analyzed-plan semantic
+#: hash, caller tag, params); values are probe RESULTS only — never data.
+#: Cleared whole once it outgrows _PROBE_MEMO_BOUND entries.
+_PROBE_MEMO: dict[tuple, object] = {}
+_PROBE_MEMO_BOUND = 512
+
+
+def _probe_key(df: DataFrame, tag: str, params: tuple) -> tuple | None:
+    try:
+        return (
+            df.sparkSession.sparkContext.applicationId,
+            df.semanticHash(),
+            tag,
+            params,
+        )
+    except Exception:
+        return None
+
+
+def memoized_probe(df: DataFrame, tag: str, params: tuple, probe):
+    """``probe()``'s result for ``df``'s analyzed plan, memoized for the
+    application's lifetime under (application id, semantic hash,
+    ``tag``, ``params``). ``tag`` names the calling decision so two
+    decisions over one frame never share an entry. A plan whose hash
+    cannot be taken is probed every call."""
+    key = _probe_key(df, tag, params)
+    if key is None:
+        return probe()
+    if key not in _PROBE_MEMO:
+        value = probe()
+        if len(_PROBE_MEMO) > _PROBE_MEMO_BOUND:
+            _PROBE_MEMO.clear()
+        _PROBE_MEMO[key] = value
+    return _PROBE_MEMO[key]
+
+
+def forget_probe(df: DataFrame, tag: str, params: tuple) -> None:
+    """Drop one memo entry — the memo's one refresh path, the stale-entry
+    eviction in dispatch.cosine_pairs_auto."""
+    _PROBE_MEMO.pop(_probe_key(df, tag, params), None)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:

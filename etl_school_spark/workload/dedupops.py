@@ -384,7 +384,7 @@ COMPONENT_ORACLES["simhash_groups"] = _groups_oracle(_SIMHASH_PAIRS_SQL)
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     # census-driven dispatch (r10): on today's corpora no bucket crosses
-    # hot_threshold at sf0.01–0.1 and the sf1 tiling's hot buckets are
+    # simhash.HOT_THRESHOLD at sf0.01–0.1 and the sf1 tiling's hot buckets are
     # TRUE duplicates (high verify pass-rate), so the chosen plan is the
     # plain single join at every measured scale — the dispatch exists
     # for the 100× boilerplate corpus where refinement measured ×0.80.

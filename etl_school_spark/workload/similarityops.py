@@ -574,18 +574,16 @@ def embedding_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = fan_out(load_table(spark, sf_dir, "embeddings")).filter(
         F.col("vec_id") % 2 == 0
     )
-    # pair_form="auto" (r11): resolves to gemm on this corpus (integral
-    # ids, expected cell size within the Arrow bound) — the same physical
+    # the pair form resolves to gemm on this corpus (integral ids,
+    # expected cell size within the Arrow bound) — the same physical
     # path r10 pinned after measuring ×0.79 at sf1 — and the resolution
-    # reuses the n_cells="auto" count, so the dispatch itself now sits
+    # reuses the n_cells="auto" count, so the dispatch itself sits
     # under the driver hash at zero extra cost. Identical edge set by
     # the shortlist-margin + exact-rescore contract; oracle untouched.
     from etl_school_spark.dedup.cluster import operator_leaf
 
     both = operator_leaf(
-        semantic_dedup(
-            emb, threshold=0.4, n_cells="auto", keep="both", pair_form="auto"
-        )
+        semantic_dedup(emb, threshold=0.4, n_cells="auto", keep="both")
     )
     for which, keep_col in (
         ("semantic:min_id", "keep_min"),

@@ -53,3 +53,14 @@ def durable_checkpoints(spark, tmp_path):
     spark.conf.set(key, str(tmp_path))
     yield tmp_path
     spark.conf.unset(key)
+
+
+@pytest.fixture
+def probe_memo():
+    """The engine's one plan-keyed probe memo (``tables._PROBE_MEMO``),
+    emptied so a test sees its own probes only. Yields the dict; a test
+    that needs a second cold start mid-test calls ``.clear()`` on it."""
+    from etl_school_spark.tables import _PROBE_MEMO
+
+    _PROBE_MEMO.clear()
+    yield _PROBE_MEMO

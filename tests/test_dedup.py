@@ -509,6 +509,10 @@ def test_connected_components_reliable_checkpoint(spark, durable_checkpoints):
     assert got == {i: 0 for i in range(n + 1)}
     files = list(durable_checkpoints.rglob("*"))
     assert any(f.is_file() for f in files), "no reliable checkpoint written"
+    # the dir is registered once, not per truncation: each registration
+    # makes a fresh UUID subdirectory
+    subdirs = [d for d in durable_checkpoints.iterdir() if d.is_dir()]
+    assert len(subdirs) == 1, subdirs
     plan = out._jdf.queryExecution().analyzed().toString()
     assert "LogicalRDD" in plan and plan.count("Join") <= 3
 
@@ -733,81 +737,6 @@ def test_incremental_dedup_releases_batch_checkpoints(spark):
     assert n_cached() <= before, (before, n_cached())
 
 
-def test_incremental_diagnosis_checkpoint_released_too(spark):
-    """r11 (ADVICE): stage_clock diagnosis mode adds a fourth
-    localCheckpoint (the s3b pairs split) — it must be registered in
-    _esp_checkpoints so release_batch_checkpoints frees it with the
-    batch instead of leaking to GC/ContextCleaner."""
-    from etl_school_spark.dedup.incremental import (
-        build_dedup_index,
-        dedup_batch_against_index,
-        release_batch_checkpoints,
-    )
-
-    sc = spark.sparkContext
-
-    def n_cached():
-        return len(sc._jsc.sc().getRDDStorageInfo())
-
-    hist = spark.createDataFrame(
-        [(0, "alpha beta gamma delta epsilon zeta eta theta")],
-        "doc_id long, text string",
-    )
-    index = build_dedup_index(hist).localCheckpoint()
-    before = n_cached()
-    batch = spark.createDataFrame(
-        [(10, "one two three four five six seven eight nine"),
-         (11, "totally different words in this second document here")],
-        "doc_id long, text string",
-    )
-    clock: dict = {}
-    accepted, rows = dedup_batch_against_index(batch, index, stage_clock=clock)
-    assert len(accepted.collect()) == 2 and len(rows.collect()) == 2
-    assert "s3b_pairs_verify" in clock
-    assert release_batch_checkpoints(accepted, rows) == 4  # 3 + diagnostic
-    assert n_cached() <= before, (before, n_cached())
-
-
-def test_incremental_truncate_stages_output_identical(spark):
-    """r11: truncate_stages=False (skip the surv/surv2 localCheckpoints
-    — the measured-and-rejected variant, kept as a knob) must produce
-    identical acceptance decisions; only the physical checkpoint set
-    differs (new_idx alone)."""
-    from etl_school_spark.dedup.incremental import (
-        build_dedup_index,
-        dedup_batch_against_index,
-        release_batch_checkpoints,
-    )
-
-    hist = spark.createDataFrame(
-        [(0, "alpha beta gamma delta epsilon zeta eta theta"),
-         (1, "shared history doc about apples and oranges and pears and plums and kiwi ok")],
-        "doc_id long, text string",
-    )
-    index = build_dedup_index(hist).localCheckpoint()
-    batch = spark.createDataFrame(
-        [(10, "alpha beta gamma delta epsilon zeta eta theta"),  # exact dup
-         (11, "shared history doc about apples and oranges and pears and plums and kiwi yes"),  # near dup
-         (12, "totally different words in this brand new document here"),
-         (13, "totally different words in this brand new document here")],  # in-batch dup
-        "doc_id long, text string",
-    )
-
-    def run(truncate):
-        acc, rows = dedup_batch_against_index(
-            batch, index, threshold=0.8, truncate_stages=truncate
-        )
-        got = sorted(r.doc_id for r in acc.collect())
-        n_ck = len(acc._esp_checkpoints)
-        release_batch_checkpoints(acc, rows)
-        return got, n_ck
-
-    a, ck_a = run(True)
-    b, ck_b = run(False)
-    assert a == b == [12]
-    assert (ck_a, ck_b) == (3, 1)
-
-
 def test_hot_bucket_probe_deterministic(spark):
     """r11 (ADVICE): the probe's sample cap is ORDERED (orderBy hash
     residue before the limit — TakeOrderedAndProject), so the measured
@@ -1021,7 +950,7 @@ def test_minhash_sig_arrow_matches_hof(spark):
     assert sum(v is not None for v in arrow.values()) > 100
 
 
-def test_simhash_auto_refine_census_dispatch(spark):
+def test_simhash_auto_refine_census_dispatch(spark, probe_memo, monkeypatch):
     """r10: refine_threshold="auto" implements the census-driven enable
     the r9 SCALING entry left manual. A planted BOILERPLATE corpus (hot
     chunk buckets whose pairs fail the hamming verify — measured
@@ -1051,16 +980,13 @@ def test_simhash_auto_refine_census_dispatch(spark):
             truedup.append((f * 1000 + m, base + (f" amendment{m}" if m % 2 else "")))
     truedup_df = spark.createDataFrame(truedup, "doc_id long, text string")
 
+    monkeypatch.setattr(sh, "HOT_THRESHOLD", 10)
+
     def run(df, **kw):
-        q = sh.simhash_near_pairs(
-            df, max_hamming=3, chunks=4, hot_threshold=10, **kw
-        )
+        q = sh.simhash_near_pairs(df, max_hamming=3, chunks=4, **kw)
         plan = q._jdf.queryExecution().analyzed().toString()
         got = {(r.id_a, r.id_b): r.hamming_dist for r in q.collect()}
         return got, "_bsz" in plan  # the size join marks the refined plan
-
-    if hasattr(spark, "_esp_simhash_refine_memo"):
-        del spark._esp_simhash_refine_memo
 
     plain_b, refined = run(boiler_df)
     assert not refined and len(plain_b) > 0
@@ -1085,8 +1011,7 @@ def test_simhash_auto_refine_census_dispatch(spark):
     try:
         run(boiler_df, refine_threshold="auto")
         assert calls["n"] == 0  # memo hit from the run above
-        if hasattr(spark, "_esp_simhash_refine_memo"):
-            del spark._esp_simhash_refine_memo
+        probe_memo.clear()
         run(boiler_df, refine_threshold="auto")
         assert calls["n"] == 1  # fresh session state → one probe
     finally:
@@ -1318,7 +1243,9 @@ def test_band_rows_drops_null_sigs(spark):
     assert rows.filter(F.col("doc") == 1).count() == 32
 
 
-def test_simhash_groups_probe_memoizes_across_warm_calls(spark, monkeypatch):
+def test_simhash_groups_probe_memoizes_across_warm_calls(
+    spark, probe_memo, monkeypatch
+):
     """r11 review fix: the groups-branch refine probe keys on the STABLE
     docs plan (+ variant), so warm re-invocations reuse the memo instead
     of re-running the probe (the old key — a per-call localCheckpoint
@@ -1338,14 +1265,14 @@ def test_simhash_groups_probe_memoizes_across_warm_calls(spark, monkeypatch):
         return real(*a, **kw)
 
     monkeypatch.setattr(sh, "_hot_bucket_pass_rate", counting)
-    spark._esp_simhash_refine_memo = {}
-    sh.simhash_dup_groups(df, max_hamming=3, chunks=4, hot_threshold=5).count()
+    monkeypatch.setattr(sh, "HOT_THRESHOLD", 5)
+    sh.simhash_dup_groups(df, max_hamming=3, chunks=4).count()
     first = calls["n"]
-    sh.simhash_dup_groups(df, max_hamming=3, chunks=4, hot_threshold=5).count()
+    sh.simhash_dup_groups(df, max_hamming=3, chunks=4).count()
     assert calls["n"] == first, "warm call re-ran the probe (memo miss)"
     # and the pairs variant keeps its own entry (no cross-contamination)
     sh.simhash_near_pairs(
-        df, max_hamming=3, chunks=4, refine_threshold="auto", hot_threshold=5
+        df, max_hamming=3, chunks=4, refine_threshold="auto"
     ).count()
     assert calls["n"] == first + 1
 
@@ -1439,10 +1366,13 @@ def test_quotient_components_checkpoint_dir_with_cap(spark, durable_checkpoints)
     stars = spark.createDataFrame(
         [(1, 10), (1, 11), (2, 20)], "id_a long, id_b long"
     )
+    # the quotient leaf: one row per clique with its member count, so
+    # the star count is (3 + 2) - 2 = 3
+    reps = spark.createDataFrame([(1, 3), (2, 2)], "_rep long, _csize long")
     want = {(1, 1), (2, 1), (10, 1), (11, 1), (20, 1)}
     for cap, sub in ((1_000_000, "union"), (1, "deferred")):
         before = files()
-        out = quotient_components(rep_pairs, stars, collect_cap=cap)
+        out = quotient_components(rep_pairs, stars, reps, collect_cap=cap)
         assert {(r.node, r.component) for r in out.collect()} == want, sub
     assert files() - before, "no reliable checkpoint written by the deferred branch"
 

@@ -1326,7 +1326,9 @@ def build_semantic_case(seed):
     # r10: the BLAS pair stage alternates in — same Python twin, so a
     # shortlist-margin or triangle-mask bug in blocked_pair_edges fails
     # the seed exactly like a join bug would. Tiny cell_block forces
-    # multi-block tiling on these small corpora.
+    # multi-block tiling on these small corpora. The test reaches each
+    # form through semantic.py's constants: GEMM_CELL_BOUND = 0 forces
+    # sql, CELL_BLOCK sets the gemm tile.
     pair_form = rng.choice(["sql", "gemm"])
     cell_block = rng.choice([2, 3, 4096]) if pair_form == "gemm" else 4096
     dim = rng.choice([4, 8])
@@ -1345,12 +1347,16 @@ def build_semantic_case(seed):
 
 
 @pytest.mark.parametrize("seed", list(range(13000, 13008)))
-def test_random_semantic_dedup_matches_python(spark, seed):
+def test_random_semantic_dedup_matches_python(spark, seed, monkeypatch):
+    from etl_school_spark.similarity import semantic
     from etl_school_spark.similarity.ivf import train_centroids
     from etl_school_spark.similarity.semantic import semantic_dedup
     from tests.test_similarity import _py_semantic_dedup
 
     n_cells, threshold, keep, pair_form, cell_block, rows = build_semantic_case(seed)
+    if pair_form == "sql":
+        monkeypatch.setattr(semantic, "GEMM_CELL_BOUND", 0)
+    monkeypatch.setattr(semantic, "CELL_BLOCK", cell_block)
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in rows],
         "vec_id long, embedding array<float>",
@@ -1362,8 +1368,6 @@ def test_random_semantic_dedup_matches_python(spark, seed):
             threshold=threshold,
             n_cells=n_cells,
             keep=keep,
-            pair_form=pair_form,
-            cell_block=cell_block,
         ).collect()
     }
     # the reference consumes the FLOAT32-rounded vectors, exactly as the

@@ -73,28 +73,24 @@ def test_lsh_topk_bucket_gemm_shape(spark):
     assert set(per_q.values()) == {5}
 
 
-def test_lsh_topk_hot_bucket_blocking_invariant(spark):
+def test_lsh_topk_hot_bucket_blocking_invariant(spark, monkeypatch):
     """r9: per-bucket corpus-side block tiling (knn.lsh_topk docstring,
     "Per-bucket memory is BOUNDED") must not change the result. Plant a
     HOT bucket far larger than the block size — bits=1/tables=1 puts
-    ~half the corpus (≈ 600 rows) into each of two buckets, corpus_block
+    ~half the corpus (≈ 600 rows) into each of two buckets, CORPUS_BLOCK
     32 forces ~19 block passes through the hot bucket — and require
     row-identical output (same neighbors, same ranks, same score BITS)
     vs an effectively unblocked run. This is the planted-straggler proof
     that the per-block shortlist union covers the bucket-wide top-k."""
-    from etl_school_spark.similarity.knn import lsh_topk
+    from etl_school_spark.similarity import knn
 
     emb = _emb(spark)
     queries = emb.filter(F.col("vec_id") % 25 == 0)
 
     def rows(block):
+        monkeypatch.setattr(knn, "CORPUS_BLOCK", block)
         return sorted(
-            map(
-                tuple,
-                lsh_topk(
-                    emb, queries, k=5, bits=1, tables=1, corpus_block=block
-                ).collect(),
-            )
+            map(tuple, knn.lsh_topk(emb, queries, k=5, bits=1, tables=1).collect())
         )
 
     blocked = rows(32)
@@ -104,7 +100,7 @@ def test_lsh_topk_hot_bucket_blocking_invariant(spark):
 
 def test_lsh_topk_auto_bits(spark):
     """r9: bits="auto" derives the bucket width from one corpus count so
-    expected membership stays ≤ corpus_block as the corpus grows — the
+    expected membership stays ≤ CORPUS_BLOCK as the corpus grows — the
     complementary bound to block tiling. The derivation is a pure
     function (unit-checked here across scales and the 64-bit pool cap),
     and the integration run must equal the explicit-bits run exactly."""
@@ -362,7 +358,7 @@ def test_cosine_pairs_auto_dispatch(spark):
     assert got2 == base2 and len(base2) > 0
 
 
-def test_cosine_pairs_auto_probe_memoized(spark):
+def test_cosine_pairs_auto_probe_memoized(spark, probe_memo):
     """r8: the dispatch density probe — almost entirely data-independent
     driver-side analysis of the hyperplane literals — must run at most
     once per (input plan, probe params) per session. Re-dispatching the
@@ -379,9 +375,6 @@ def test_cosine_pairs_auto_probe_memoized(spark):
         calls["n"] += 1
         return real(*a, **kw)
 
-    # drop any memo left by earlier tests in this shared session
-    if hasattr(spark, "_esp_density_memo"):
-        del spark._esp_density_memo
     dsp.lsh_candidate_density = counting
     try:
         r1 = cosine_pairs_auto_rows(dsp, emb)
@@ -396,42 +389,48 @@ def test_cosine_pairs_auto_probe_memoized(spark):
         dsp.lsh_candidate_density = real
 
 
-def cosine_pairs_auto_rows(dsp, frame, **kw):
-    return sorted(
-        (r.id_a, r.id_b) for r in dsp.cosine_pairs_auto(frame, 0.4, **kw).collect()
-    )
-
-
-def test_cosine_pairs_auto_force_reprobe(spark):
-    """r9 staleness escape hatch (a): ``force_reprobe=True`` must bypass
-    the memo and re-run the density query (then overwrite the entry), for
-    callers who mutate table content under an unchanged analyzed plan."""
+def test_probe_memo_one_bounded_module_dict(spark, probe_memo):
+    """The fan_out partition probe, the cosine_pairs_auto density probe
+    and the simhash refine probe share ONE module-level memo
+    (tables.memoized_probe): decisions over the same frame keep separate
+    entries (the caller tag is in the key), the memo clears itself once
+    it outgrows its bound, and nothing is hung on the session object."""
+    from etl_school_spark import tables
+    from etl_school_spark.dedup import simhash as sh
     from etl_school_spark.similarity import dispatch as dsp
 
     emb = _emb(spark)
-    calls = {"n": 0}
-    real = dsp.lsh_candidate_density
+    tables.fan_out(emb)
+    dsp.cosine_pairs_auto(emb, 0.4)
+    h = emb.semanticHash()
+    assert {k[2] for k in probe_memo if k[1] == h} == {"cosine_pairs_auto", "fan_out"}
+    # same frame, same params, two decisions: two entries, two answers
+    assert tables.memoized_probe(emb, "first", (), lambda: 1) == 1
+    assert tables.memoized_probe(emb, "second", (), lambda: 2) == 2
+    docs = spark.createDataFrame(
+        [(i, f"shared words here and doc {i}") for i in range(20)],
+        "doc_id long, text string",
+    )
+    sh.simhash_near_pairs(docs, refine_threshold="auto")
+    assert any(k[2] == "simhash_refine_pairs" for k in probe_memo)
+    assert [a for a in vars(spark) if a.startswith("_esp_") and a.endswith("_memo")] == []
 
-    def counting(*a, **kw):
-        calls["n"] += 1
-        return real(*a, **kw)
-
-    if hasattr(spark, "_esp_density_memo"):
-        del spark._esp_density_memo
-    dsp.lsh_candidate_density = counting
-    try:
-        r1 = cosine_pairs_auto_rows(dsp, emb)
-        assert calls["n"] == 1
-        r2 = cosine_pairs_auto_rows(dsp, emb, force_reprobe=True)
-        assert calls["n"] == 2  # memo bypassed, probe re-ran
-        assert r1 == r2
-        cosine_pairs_auto_rows(dsp, emb)
-        assert calls["n"] == 2  # refreshed entry serves the next call
-    finally:
-        dsp.lsh_candidate_density = real
+    probe_memo.clear()
+    bound = tables._PROBE_MEMO_BOUND
+    for i in range(bound + 1):
+        tables.memoized_probe(emb, "bound", (i,), lambda: 0)
+    assert len(probe_memo) == bound + 1
+    tables.memoized_probe(emb, "bound", ("overflow",), lambda: 0)
+    assert len(probe_memo) == 1  # cleared whole, then the new entry
 
 
-def test_cosine_pairs_auto_evicts_stale_memo_on_dense_cap(spark):
+def cosine_pairs_auto_rows(dsp, frame):
+    return sorted((r.id_a, r.id_b) for r in dsp.cosine_pairs_auto(frame, 0.4).collect())
+
+
+def test_cosine_pairs_auto_evicts_stale_memo_on_dense_cap(
+    spark, probe_memo, monkeypatch
+):
     """r9 staleness escape hatch (b), closing the r8 ADVICE hole: a stale
     memoized count that routes a now-oversized corpus into the dense
     branch hits cosine_pairs_dense's cap ValueError — the dispatcher must
@@ -451,16 +450,14 @@ def test_cosine_pairs_auto_evicts_stale_memo_on_dense_cap(spark):
             return (20, 1.0)  # stale: "fits the cap, dense regime"
         return real(*a, **kw)
 
-    if hasattr(spark, "_esp_density_memo"):
-        del spark._esp_density_memo
+    # cap = 10 x 3 = 30 rows << the real corpus -> dense raises
+    monkeypatch.setattr(dsp, "DENSE_BLOCK", 10)
+    monkeypatch.setattr(dsp, "MAX_DENSE_BLOCKS", 3)
     dsp.lsh_candidate_density = stale_then_real
     try:
-        # cap = 10 x 3 = 30 rows << the real corpus -> dense raises
         got = {
             (r.id_a, r.id_b): r.cosine_sim
-            for r in dsp.cosine_pairs_auto(
-                emb, 0.4, dense_block=10, max_dense_blocks=3
-            ).collect()
+            for r in dsp.cosine_pairs_auto(emb, 0.4).collect()
         }
         assert calls["n"] == 2  # stale probe + one eviction re-probe
     finally:
@@ -514,12 +511,13 @@ def test_int8_quantization_roundtrip_bounds(spark):
         assert abs(r.p.q_mse - (err ** 2).mean()) < 1e-12
 
 
-def test_ivf_cell_block_invariant_and_no_broadcast_handles(spark):
+def test_ivf_cell_block_invariant_and_no_broadcast_handles(spark, monkeypatch):
     """r9: the ivf cell scorer shares knn's block-tiled shortlist
-    (gemm.blocked_shortlist_scores) — shrinking cell_block far below the
+    (gemm.blocked_shortlist_scores) — shrinking CELL_BLOCK far below the
     cell size must not change a single row/bit. And ivf frames carry NO
     broadcast handles (centroids are plan literals, ivf_topk docstring),
     so destroy_broadcasts is a documented 0-return no-op there."""
+    from etl_school_spark.similarity import ivf
     from etl_school_spark.similarity.gemm import destroy_broadcasts
     from etl_school_spark.similarity.ivf import ivf_topk
 
@@ -527,12 +525,11 @@ def test_ivf_cell_block_invariant_and_no_broadcast_handles(spark):
     queries = emb.filter(F.col("vec_id") % 25 == 0)
 
     def rows(block):
+        monkeypatch.setattr(ivf, "CELL_BLOCK", block)
         return sorted(
             map(
                 tuple,
-                ivf_topk(
-                    emb, queries, k=5, n_cells=16, nprobe=6, cell_block=block
-                ).collect(),
+                ivf_topk(emb, queries, k=5, n_cells=16, nprobe=6).collect(),
             )
         )
 
@@ -556,22 +553,6 @@ def test_destroy_broadcasts_does_not_survive_derived_frames(spark):
     assert destroy_broadcasts(derived) == 0  # hook did not propagate
     assert len(derived.collect()) > 0  # blocks still live
     assert destroy_broadcasts(out) == 1  # the original frees them
-
-
-def test_ivf_verify_backends_bit_identical(spark):
-    """The cogroup-gemm verify (default) and the declarative cell-join
-    verify must produce IDENTICAL rows — same neighbors, same ranks,
-    same score BITS (both emit exact sequential-fold doubles over the
-    same candidate set) — so either backend satisfies the one oracle."""
-    from etl_school_spark.similarity.ivf import ivf_topk
-
-    emb = _emb(spark)
-    queries = emb.filter(F.col("vec_id") % 25 == 0)
-    a = {(r.query_id, r.rank): (r.neighbor_id, r.score)
-         for r in ivf_topk(emb, queries, k=5, n_cells=16, nprobe=6, verify="gemm").collect()}
-    b = {(r.query_id, r.rank): (r.neighbor_id, r.score)
-         for r in ivf_topk(emb, queries, k=5, n_cells=16, nprobe=6, verify="sql").collect()}
-    assert a == b and len(a) > 0
 
 
 def test_destroy_broadcasts_releases_blocks_on_request(spark):
@@ -1033,18 +1014,20 @@ def test_arrow_kernels_tolerate_null_vectors(spark):
     assert all(v is not None for k, v in dd.items() if k != 999)
 
 
-def test_semantic_pair_form_gemm_matches_sql(spark):
-    """r10: the BLAS within-cell pair stage (pair_form="gemm",
+def test_semantic_pair_form_gemm_matches_sql(spark, monkeypatch):
+    """r10: the BLAS within-cell pair stage (the gemm form,
     gemm.blocked_pair_edges — shortlist at threshold − margin, exact
     sequential-fold decide) must produce a row-identical result to the
     declarative HOF-fold join at every threshold and block size,
-    including single-row blocks that force maximal tiling.
+    including single-row blocks that force maximal tiling. The sql form
+    is forced with GEMM_CELL_BOUND = 0 (every cell is "too big").
 
     r11: the corpus carries TWO NULL-embedding rows — they share the
     NULL cell group, so the gemm branch's kernel sees a group with
     multiple None vectors (the r10 default-crash regression the r11
     fix in blocked_pair_edges covers: NULL vectors can never form an
     edge, matching the sql form's NULL-join-key semantics)."""
+    from etl_school_spark.similarity import semantic
     from etl_school_spark.similarity.semantic import semantic_dedup
 
     emb = _emb(spark).filter(F.col("vec_id") < 150).select("vec_id", "embedding")
@@ -1061,9 +1044,12 @@ def test_semantic_pair_form_gemm_matches_sql(spark):
         }
 
     for threshold in (0.4, 0.95):
-        base = rows(threshold=threshold, pair_form="sql")
+        monkeypatch.setattr(semantic, "GEMM_CELL_BOUND", 0)
+        base = rows(threshold=threshold)
+        monkeypatch.undo()
         for block in (3, 4096):
-            got = rows(threshold=threshold, pair_form="gemm", cell_block=block)
+            monkeypatch.setattr(semantic, "CELL_BLOCK", block)
+            got = rows(threshold=threshold)
             assert got == base, f"t={threshold} block={block}"
 
 
@@ -1089,46 +1075,41 @@ def test_lsh_density_probe_tolerates_null_vectors(spark):
     assert d1 == d0
 
 
-def test_semantic_dedup_rejects_bad_pair_form(spark):
-    from etl_school_spark.similarity.semantic import semantic_dedup
-
-    with pytest.raises(ValueError, match="pair_form"):
-        semantic_dedup(_emb(spark), pair_form="blas")
-
-
-def test_semantic_pair_form_auto_dispatch(spark):
-    """r10: pair_form="auto" (the default) picks gemm when its
-    contracts hold (integer ids, expected cell ≤ gemm_cell_bound) and
+def test_semantic_pair_form_auto_dispatch(spark, monkeypatch):
+    """r10: the pair-form dispatch picks gemm when its
+    contracts hold (integer ids, expected cell ≤ GEMM_CELL_BOUND) and
     sql otherwise; the decision helper is unit-tested directly (the
     pair stage executes eagerly inside connected_components, so the
     choice is invisible in the output plan) and the full default-params
     run completes under each decision. Edge-set identity across forms
     is pinned by the explicit-form differential tests."""
+    from etl_school_spark.similarity import semantic
     from etl_school_spark.similarity.semantic import (
         _resolve_pair_form,
         semantic_dedup,
     )
 
     emb = _emb(spark).filter(F.col("vec_id") < 60)
-    form, n = _resolve_pair_form(emb, "vec_id", 4, 65_536, None)
+    form, n = _resolve_pair_form(emb, "vec_id", 4, None)
     assert form == "gemm" and n == 60
-    # tiny bound → expected cell exceeds it → sql (count reused)
-    assert _resolve_pair_form(emb, "vec_id", 4, 2, 60) == ("sql", 60)
     # string ids → sql, and NO count job is spent on the decision
     s = emb.select(
         F.concat(F.lit("d-"), F.col("vec_id")).alias("vec_id"), "embedding"
     )
-    assert _resolve_pair_form(s, "vec_id", 4, 65_536, None) == ("sql", None)
+    assert _resolve_pair_form(s, "vec_id", 4, None) == ("sql", None)
     # full default-params runs land on each branch without error
     assert semantic_dedup(emb, threshold=0.999999).count() == 60
     assert semantic_dedup(s, threshold=0.999999).count() == 60
+    # tiny bound → expected cell exceeds it → sql (count reused)
+    monkeypatch.setattr(semantic, "GEMM_CELL_BOUND", 2)
+    assert _resolve_pair_form(emb, "vec_id", 4, 60) == ("sql", 60)
 
 
 def test_semantic_gemm_rejects_string_ids_loudly(spark):
     """r10: the gemm pair form's long/long edge schema cannot carry
-    string ids — the guard must fail at plan time with a pointer to the
-    sql form, not as an opaque numpy cast error inside the worker. The
-    sql form itself handles string ids fine."""
+    string ids, so the pair-form dispatch never hands them to it: a
+    string-id corpus with a pinned cell count takes the sql form, which
+    is id-type-agnostic, and keeps its string ids."""
     from etl_school_spark.similarity.semantic import semantic_dedup
 
     emb = (
@@ -1136,9 +1117,7 @@ def test_semantic_gemm_rejects_string_ids_loudly(spark):
         .filter(F.col("vec_id") < 40)
         .select(F.concat(F.lit("doc-"), F.col("vec_id")).alias("vec_id"), "embedding")
     )
-    with pytest.raises(ValueError, match="pair_form='sql'"):
-        semantic_dedup(emb, n_cells=4, pair_form="gemm")
-    out = semantic_dedup(emb, threshold=0.999999, n_cells=4, pair_form="sql")
+    out = semantic_dedup(emb, threshold=0.999999, n_cells=4)
     rows = out.collect()
     assert len(rows) == 40 and all(isinstance(r.vec_id, str) for r in rows)
 
@@ -1182,7 +1161,7 @@ def test_semantic_dedup_auto_cells_matches_explicit(spark):
     assert {c for c, _, _ in auto.values()} <= set(range(want_cells))
 
 
-def test_cosine_pairs_auto_does_not_swallow_unrelated_valueerror(spark):
+def test_cosine_pairs_auto_does_not_swallow_unrelated_valueerror(spark, probe_memo):
     """r10 ADVICE: the stale-memo eviction catches only DenseCapExceeded.
     Any OTHER ValueError raised inside the dense branch must propagate
     unmasked — no silent reroute to the bucketed plan, no extra probe."""
@@ -1200,8 +1179,6 @@ def test_cosine_pairs_auto_does_not_swallow_unrelated_valueerror(spark):
     def broken_dense(*a, **kw):
         raise ValueError("unrelated failure inside the dense branch")
 
-    if hasattr(spark, "_esp_density_memo"):
-        del spark._esp_density_memo
     dsp.lsh_candidate_density = dense_probe
     dsp.cosine_pairs_dense = broken_dense
     try:
