@@ -23,7 +23,12 @@ from graphlib import TopologicalSorter
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.util import inheritable_thread_target
 
-from etl_school_spark.sources.writers import _restore_interrupted_swap, append_rows, replace_table
+from etl_school_spark.sources.writers import (
+    _restore_interrupted_swap,
+    append_rows,
+    read_table,
+    replace_table,
+)
 
 AUDIT_SCHEMA = (
     "run_id string, task_name string, state string, scheduled_time double, "
@@ -98,7 +103,7 @@ class TaskDag:
 
     # -- monitoring (T7) --------------------------------------------------
     def history(self) -> DataFrame:
-        return self.spark.read.parquet(self.history_dir)
+        return read_table(self.spark, self.history_dir)
 
     def task_durations(self) -> DataFrame:
         """Per-task avg/max duration seconds (A4:714-728)."""
@@ -141,14 +146,15 @@ def retention_sweep(
 
     Plain parquet has no row deletes — rewrite keeping recent rows
     (at scale: date-partitioned table + partition drop, no rewrite) and
-    swap the rewrite in crash-safely; the retained rows are counted on
-    that one write. Returns rows retained.
+    swap the rewrite in crash-safely. The table is read with
+    ``read_table`` and the retained rows are counted on the rewrite, so
+    that one write is the sweep's only job. Returns rows retained.
     """
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     _restore_interrupted_swap(table_dir)
-    df = spark.read.parquet(table_dir)
+    df = read_table(spark, table_dir)
     now = (
         F.expr(f"timestampadd(SECOND, {int(now_ts)}, TIMESTAMP_NTZ '1970-01-01 00:00:00')")
         if now_ts is not None

@@ -1,9 +1,9 @@
 """Data-quality layer (SURVEY.md §2.10 G2/G7; §2.4 A5–A8, §5.4).
 
 Re-expresses the reference's RUN_DQ procedure + alerting DAG
-(A4:738-770, 842-919): a metric suite computed in ONE pass over the table
-(conditional aggregation), unpivoted to long form, appended to a metrics
-table; alerts are the latest metrics joined to a threshold relation.
+(A4:738-770, 842-919): a metric suite observed in ONE pass over the table
+(conditional aggregation), appended in long form to a metrics table;
+alerts are the latest metrics checked against a threshold map.
 """
 
 from __future__ import annotations
@@ -27,21 +27,27 @@ class DqRule:
     threshold: float  # alert when metric_value < threshold
 
 
-def dq_metrics(df: DataFrame, rules: list[DqRule], group: str = "dq") -> DataFrame:
-    """One-pass ratio metrics, long form (metric_name, metric_value,
-    metric_den, computed_at). avg(iff(pred,1,0)) per rule (A4:800-818)."""
-    aggs = [
-        F.avg(F.when(r.pred, 1.0).otherwise(0.0)).alias(r.name) for r in rules
-    ] + [F.count(F.lit(1)).cast("double").alias("_den")]
-    wide = df.agg(*aggs)
-    long = wide.unpivot(["_den"], [r.name for r in rules], "metric_name", "metric_value")
-    return long.select(
-        F.lit(group).alias("metric_group"),
-        "metric_name",
-        "metric_value",
-        F.col("_den").alias("metric_den"),
-        F.timestamp_seconds(F.lit(time.time())).cast("timestamp_ntz").alias("computed_at"),
-    )
+DQ_METRICS_SCHEMA = (
+    "metric_group string, metric_name string, metric_value double, "
+    "metric_den double, computed_at timestamp_ntz"
+)
+
+
+def _check_unique(rules: list[DqRule]) -> None:
+    """A suite names each metric once: the metrics table, ``latest_metrics``
+    and the alerts' threshold map all key on the rule name."""
+    seen: set[str] = set()
+    for r in rules:
+        if r.name in seen:
+            raise ValueError(f"duplicate DQ rule name: {r.name!r}")
+        seen.add(r.name)
+
+
+def _ratios(rules: list[DqRule]) -> list[Column]:
+    """The suite's aggregates, avg(iff(pred,1,0)) per rule (A4:800-818),
+    unnamed: the one form ``run_dq`` and ``observed_write`` both observe."""
+    _check_unique(rules)
+    return [F.avg(F.when(r.pred, 1.0).otherwise(0.0)) for r in rules]
 
 
 def run_dq(
@@ -51,13 +57,33 @@ def run_dq(
     metrics_dir: str | None = None,
     group: str = "dq",
 ) -> DataFrame:
-    """G2 RUN_DQ: compute metrics, optionally append to the metrics table,
-    return the metric rows. The suite is aggregated once: the returned
-    frame holds the collected rows, so reading it runs no second pass."""
-    m = dq_metrics(df, rules, group)
+    """G2 RUN_DQ: compute each rule's ratio metric (``_ratios``) in ONE
+    pass over ``df``; optionally append the metric rows to the metrics
+    table; return them in long form (metric_group, metric_name,
+    metric_value, metric_den, computed_at).
+
+    The suite is observed (``df.observe``) on one scan into the ``noop``
+    sink, so that scan is the call's only Spark job: an ``agg().collect()``
+    needs an exchange job first. The returned frame holds the rows, so
+    reading it runs no second pass. ``computed_at`` is the call's wall
+    clock in the session time zone. Rule names must be unique
+    (``ValueError`` otherwise).
+    """
+    from pyspark.sql import Observation
+
+    ratios = _ratios(rules)
+    obs = Observation()
+    df.observe(
+        obs,
+        F.count(F.lit(1)).cast("double").alias("den"),
+        F.timestamp_seconds(F.lit(time.time())).cast("timestamp_ntz").alias("at"),
+        *[c.alias(f"m{i}") for i, c in enumerate(ratios)],
+    ).write.format("noop").mode("overwrite").save()
+    got = obs.get
+    rows = [(group, r.name, got[f"m{i}"], got["den"], got["at"]) for i, r in enumerate(rules)]
     if metrics_dir:
-        return append_rows(spark, metrics_dir, m.collect(), m.schema)
-    return local_frame(spark, m.collect(), m.schema)
+        return append_rows(spark, metrics_dir, rows, DQ_METRICS_SCHEMA)
+    return local_frame(spark, rows, DQ_METRICS_SCHEMA)
 
 
 def latest_metrics(metrics: DataFrame) -> DataFrame:
@@ -84,7 +110,7 @@ def observed_write(
     from pyspark.sql import Observation
 
     obs = Observation("dq")
-    aggs = [F.avg(F.when(r.pred, 1.0).otherwise(0.0)).alias(r.name) for r in rules]
+    aggs = [c.alias(r.name) for r, c in zip(rules, _ratios(rules))]
     observed = df.observe(obs, F.count(F.lit(1)).alias("_rows"), *aggs)
     observed.write.mode(mode).parquet(path)
     return dict(obs.get)
@@ -124,14 +150,18 @@ def streaming_dq(
 
 
 def dq_alerts(spark: SparkSession, metrics: DataFrame, rules: list[DqRule]) -> DataFrame:
-    """G7: join latest metrics against thresholds, emit breach rows
-    (A4:874-919)."""
-    thresholds = local_frame(
-        spark, [(r.name, float(r.threshold)) for r in rules], "metric_name string, threshold double"
-    )
-    latest = latest_metrics(metrics)
+    """G7: emit a breach row for each latest metric below its rule's
+    threshold (A4:874-919). Each threshold is looked up in a literal map
+    keyed by rule name, so the check needs no join, and no job to
+    broadcast a threshold table; a metric with no rule emits nothing.
+    Rule names must be unique (``ValueError`` otherwise)."""
+    _check_unique(rules)
+    thresholds = F.create_map(
+        *[F.lit(v) for r in rules for v in (r.name, float(r.threshold))]
+    ).cast("map<string,double>")
     return (
-        latest.join(F.broadcast(thresholds), "metric_name", "inner")
+        latest_metrics(metrics)
+        .withColumn("threshold", thresholds[F.col("metric_name")])
         .filter(F.col("metric_value") < F.col("threshold"))
         .select(
             F.timestamp_seconds(F.lit(time.time())).cast("timestamp_ntz").alias("alert_time"),

@@ -68,17 +68,11 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
-    """A small driver-side frame (audit rows, thresholds, collected
-    metrics) built through Arrow.
-
-    ``spark.createDataFrame(<python list>)`` parallelizes the rows, so every
-    job over the frame starts a Python worker to read them back. An Arrow
-    table instead plans as a JVM ``LocalRelation``: writing a few audit
-    rows costs one short JVM job. ``rows`` are tuples (or ``Row``s) in
-    ``schema`` order, of flat atomic types; ``timestamp_ntz`` columns take
-    naive datetimes.
-    """
+def arrow_rows(rows, schema: StructType | str):
+    """``(pyarrow.Table, StructType)`` holding a few driver-side rows: the
+    one builder behind ``local_frame`` and ``sources.writers.append_rows``.
+    ``rows`` are tuples (or ``Row``s) in ``schema`` order, of flat atomic
+    types; ``timestamp_ntz`` columns take naive datetimes."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -89,4 +83,17 @@ def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFram
     table = pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
     )
+    return table, schema
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType | str) -> DataFrame:
+    """A small driver-side frame (audit rows, collected metrics) built
+    through Arrow (``arrow_rows``).
+
+    ``spark.createDataFrame(<python list>)`` parallelizes the rows, so every
+    job over the frame starts a Python worker to read them back. An Arrow
+    table instead plans as a JVM ``LocalRelation``: collecting it runs no
+    job, and a job over it starts no Python worker.
+    """
+    table, schema = arrow_rows(rows, schema)
     return spark.createDataFrame(table, schema)

@@ -11,20 +11,26 @@ file move for parquet-to-parquet loads.
 from __future__ import annotations
 
 import glob
+import json
 import os
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from etl_school_spark.session import local_frame
+from etl_school_spark.session import arrow_rows, local_frame
 from etl_school_spark.sources.readers import CORRUPT_COL, read_stage, split_corrupt
 
 COPY_HISTORY_SCHEMA = (
     "target string, n_files long, rows_loaded long, rows_rejected long, "
     "file_bytes long, started double, completed double"
 )
+
+# the footer key under which Spark's parquet writer stores the table's
+# Spark schema (as JSON); Spark's reader takes the schema from it
+SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "append") -> None:
@@ -39,13 +45,65 @@ def append_rows(spark: SparkSession, table_dir: str, rows, schema: StructType | 
     """Append a few driver-side rows (audit records, collected metrics) to
     the parquet table at ``table_dir`` as one file, and return them as a
     frame. Every audit table the engine keeps — ``task_history``,
-    ``copy_history``, the DQ metrics table and the broker delivery audit —
-    is appended here. The rows go through ``session.local_frame`` (Arrow →
-    a JVM ``LocalRelation``), so the append is one short JVM job and starts
-    no Python worker."""
-    df = local_frame(spark, rows, schema)
-    df.coalesce(1).write.mode("append").parquet(table_dir)
-    return df
+    ``copy_history``, the DQ metrics table and the broker delivery audits —
+    is appended here.
+
+    The file is written on the driver with pyarrow, so the append runs no
+    Spark job. Its footer carries the Spark schema under the key Spark's
+    own writer uses (``SPARK_SCHEMA_KEY``), so Spark and ``read_table``
+    read the rows back with their exact Spark types. It is written under a
+    ``_``-prefixed name, which Spark's readers skip, and renamed into place
+    only once complete: a crash mid-write leaves no partial rows in the
+    table. The returned frame is the ``session.local_frame`` of the rows.
+    """
+    import pyarrow.parquet as pq
+
+    table, schema = arrow_rows(rows, schema)
+    # the writer version too, as Spark's writer stores it: Spark's reader
+    # decides from it how to read old dates and timestamps
+    table = table.replace_schema_metadata(
+        {SPARK_SCHEMA_KEY: schema.json(), "org.apache.spark.version": spark.version}
+    )
+    os.makedirs(table_dir, exist_ok=True)
+    name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+    tmp = os.path.join(table_dir, "_" + name)
+    try:
+        pq.write_table(table, tmp, compression="snappy")
+        os.rename(tmp, os.path.join(table_dir, name))
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+    return local_frame(spark, rows, schema)
+
+
+def read_table(spark: SparkSession, table_dir: str) -> DataFrame:
+    """Read a parquet table this engine wrote, with the Spark schema stored
+    in one data file's footer. A bare ``spark.read.parquet`` takes its
+    schema from that same footer key, but it runs a Spark job to read the
+    footer; this reads it on the driver. A table whose first data file
+    carries no Spark schema (written by another tool), or that has
+    partition subdirectories, is read by ``spark.read.parquet`` alone."""
+    schema = _footer_schema(table_dir)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(table_dir)
+
+
+def _footer_schema(table_dir: str) -> StructType | None:
+    """The Spark schema in the footer of the first data file directly in
+    ``table_dir`` (in name order; Spark skips names starting with ``_`` or
+    ``.``), or None."""
+    import pyarrow.parquet as pq
+
+    if not os.path.isdir(table_dir):
+        return None
+    with os.scandir(table_dir) as it:
+        entries = sorted((e for e in it if not e.name.startswith(("_", "."))), key=lambda e: e.name)
+    if not entries or any(e.is_dir() for e in entries):
+        return None
+    meta = pq.read_metadata(entries[0].path).metadata or {}
+    stored = meta.get(SPARK_SCHEMA_KEY.encode())
+    return StructType.fromJson(json.loads(stored)) if stored else None
 
 
 def copy_into(
@@ -112,7 +170,7 @@ def copy_history_rollup(spark: SparkSession, history_dir: str) -> DataFrame:
     """A10/T7: load-volume rollup over the copy audit —
     ``sum(row_count), sum(file_size)`` per target (A4:706-712)."""
     return (
-        spark.read.parquet(history_dir)
+        read_table(spark, history_dir)
         .groupBy("target")
         .agg(
             F.count(F.lit(1)).alias("n_loads"),
@@ -137,8 +195,14 @@ def merge_upsert(
     plain-parquet equivalent of MERGE INTO (a table format like
     Delta/Iceberg does this transactionally; the dataflow is identical).
     The anti join broadcasts the update KEYS only, so cost is one pass
-    over the current table regardless of update width. Both counts are
-    observed during that one write, not by extra jobs.
+    over the current table regardless of update width. The keys are not
+    deduplicated first: a left-anti join keeps the same rows whether or
+    not a key repeats on its right side, and a ``distinct`` would cost an
+    exchange job of its own. The table is read with ``read_table``, so
+    its schema costs no job, and both counts are observed during the one
+    write: a merge into an existing table runs two jobs, the key
+    broadcast and the write. Columns of ``updates`` are matched to the
+    table's by name.
 
     Returns (rows_updated_or_inserted, total_rows_after).
     """
@@ -148,9 +212,8 @@ def merge_upsert(
     obs_upd, obs_total = Observation(), Observation()
     observed = updates.observe(obs_upd, F.count(F.lit(1)).alias("n"))
     if os.path.isdir(table_dir) and any(f.endswith(".parquet") for f in os.listdir(table_dir)):
-        current = spark.read.parquet(table_dir)
-        keys = updates.select(key).distinct()
-        survivors = current.join(F.broadcast(keys), key, "left_anti")
+        current = read_table(spark, table_dir)
+        survivors = current.join(F.broadcast(updates.select(key)), key, "left_anti")
         merged = survivors.unionByName(observed)
     else:
         merged = observed
@@ -219,7 +282,7 @@ def compact_parquet_dir(
     ]
     total = sum(os.path.getsize(f) for f in files_before)
     n_out = max(1, math.ceil(total / (target_file_mb * 1024 * 1024)))
-    replace_table(spark.read.parquet(table_dir).repartition(n_out), table_dir)
+    replace_table(read_table(spark, table_dir).repartition(n_out), table_dir)
     files_after = glob.glob(os.path.join(table_dir, "*.parquet"))
     return len(files_before), len(files_after)
 

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from etl_school_spark.sources.writers import append_rows
+from etl_school_spark.sources.writers import append_rows, read_table
 
 # one row per (micro-batch, consumer): claimed_by ≈ the consumer group
 DELIVERY_AUDIT_SCHEMA = (
@@ -185,7 +185,7 @@ class FileBroker:
         one group member)."""
         audit_dir = os.path.join(self.root, "audit", topic)
         return (
-            self.spark.read.parquet(audit_dir)
+            read_table(self.spark, audit_dir)
             .groupBy("claimed_by", "consumer_id")
             .agg(F.sum("n_messages").alias("n_claimed"))
             .orderBy("claimed_by", "consumer_id")
@@ -204,7 +204,7 @@ class FileBroker:
         delivered: dict[str, int] = {}
         if os.path.isdir(audit_dir) and os.listdir(audit_dir):
             rows = (
-                self.spark.read.parquet(audit_dir)
+                read_table(self.spark, audit_dir)
                 .groupBy("claimed_by")
                 .agg(F.sum("n_messages").alias("n"))
                 .collect()

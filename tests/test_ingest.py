@@ -216,9 +216,12 @@ def test_copy_into_rejects_corrupt_lines_with_plain_schema(spark, tmp_path):
 def test_copy_into_and_merge_upsert_job_counts(spark, tmp_path):
     """Pins the Spark jobs of a load and a merge, on the first write and on
     a write into an existing table. copy_into: one counting aggregation
-    over the cached parse, the good write, the rejects write, the history
-    row. merge_upsert: the write alone on a first load; its counts come
-    from observations on that write, not from extra jobs."""
+    over the cached parse, the good write and the rejects write; the
+    history row is appended on the driver. merge_upsert: the write alone
+    on a first load; into an existing table, the update-key broadcast and
+    the write. The table's schema comes from its footer on the driver
+    (``read_table``), the keys are not deduplicated by an exchange, and
+    the counts come from observations on the write, not from extra jobs."""
     from etl_school_spark.sources.writers import copy_into, merge_upsert
     from tests.jobcount import count_jobs
 
@@ -228,7 +231,7 @@ def test_copy_into_and_merge_upsert_job_counts(spark, tmp_path):
         _write_orders_json(spark, os.path.join(stage, f"batch_{i}.json"), n=8, corrupt=1, seed=i)
         with count_jobs(spark) as jobs:
             assert copy_into(spark, stage, target, CLIENT_BUY_ORDERS, history_dir=hist) == 8
-        assert jobs.n == 6, f"copy_into load {i}: {jobs.n} jobs"
+        assert jobs.n == 5, f"copy_into load {i}: {jobs.n} jobs"
 
     table = str(tmp_path / "keyed")
     for i, want in enumerate([(5, 5), (5, 7)]):
@@ -236,7 +239,7 @@ def test_copy_into_and_merge_upsert_job_counts(spark, tmp_path):
         updates = spark.createDataFrame(rows, "id long, v string")
         with count_jobs(spark) as jobs:
             assert merge_upsert(spark, table, updates, "id") == want
-        assert jobs.n == (1, 4)[i], f"merge_upsert {i}: {jobs.n} jobs"
+        assert jobs.n == (1, 2)[i], f"merge_upsert {i}: {jobs.n} jobs"
 
 
 def _crash_once(monkeypatch, obj, name):
@@ -317,9 +320,9 @@ def test_retention_sweep_recovers_from_crash_mid_swap(spark, tmp_path, monkeypat
 
 
 def test_retention_sweep_job_count(spark, tmp_path):
-    """A sweep runs two jobs: reading the table's footer schema, and the
-    one rewrite, on which an observation counts the retained rows. There
-    is no separate count job over a cached frame."""
+    """A sweep runs one job: the rewrite, on which an observation counts
+    the retained rows. The table's footer schema is read on the driver,
+    and there is no separate count job over a cached frame."""
     from etl_school_spark.orchestrate import retention_sweep
     from tests.jobcount import count_jobs
 
@@ -327,7 +330,7 @@ def test_retention_sweep_job_count(spark, tmp_path):
     now_ts = _retention_table(spark, table)
     with count_jobs(spark) as jobs:
         assert retention_sweep(spark, table, "ts", keep_days=90, now_ts=now_ts) == 10
-    assert jobs.n == 2, f"retention_sweep: {jobs.n} jobs"
+    assert jobs.n == 1, f"retention_sweep: {jobs.n} jobs"
 
 
 def test_compact_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatch):
@@ -346,3 +349,187 @@ def test_compact_recovers_from_crash_mid_swap(spark, tmp_path, monkeypatch):
     assert compact_parquet_dir(spark, table) == (6, 1)
     assert sorted(r.id for r in spark.read.parquet(table).collect()) == list(range(300))
     assert not os.path.exists(table + "__old")
+
+
+def test_compact_job_count(spark, tmp_path):
+    """Compacting an 8-file table runs two jobs: the repartition's exchange
+    and the write. Its schema comes from a footer read on the driver."""
+    from etl_school_spark.sources.writers import compact_parquet_dir
+    from tests.jobcount import count_jobs
+
+    table = str(tmp_path / "t")
+    spark.range(0, 400, numPartitions=8).write.parquet(table)
+    with count_jobs(spark) as jobs:
+        assert compact_parquet_dir(spark, table) == (8, 1)
+    assert jobs.n == 2, f"compact_parquet_dir: {jobs.n} jobs"
+    assert sorted(r.id for r in spark.read.parquet(table).collect()) == list(range(400))
+
+
+AUDIT_DDL = "s string, n long, d double, ts timestamp_ntz, e string, i int"
+
+
+def _audit_rows(k):
+    import datetime
+
+    return [
+        (f"r{k}", k, k + 0.5, datetime.datetime(2024, 2, 29, 23, 59, 59, 123456 + k), None, k),
+        (None, None, None, None, f"x{k}", None),
+    ]
+
+
+@pytest.fixture
+def new_york_session(spark):
+    """The session time zone set to a non-UTC zone for one test."""
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    yield spark
+    spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+def test_append_rows_runs_no_job_and_round_trips(new_york_session, tmp_path):
+    """append_rows writes on the driver (no Spark job) and its rows read
+    back with their exact Spark types — nulls and timestamp_ntz wall-clock
+    values — through a bare Spark read and through read_table."""
+    from pyspark.sql.types import StructType
+
+    from etl_school_spark.sources.writers import append_rows, read_table
+    from tests.jobcount import count_jobs
+
+    spark, table = new_york_session, str(tmp_path / "audit")
+    for k in range(2):
+        with count_jobs(spark) as jobs:
+            df = append_rows(spark, table, _audit_rows(k), AUDIT_DDL)
+        assert jobs.n == 0, f"append_rows: {jobs.n} jobs"
+        assert [tuple(r) for r in df.collect()] == _audit_rows(k)
+    want = sorted(_audit_rows(0) + _audit_rows(1), key=repr)
+    for back in (spark.read.parquet(table), read_table(spark, table)):
+        assert back.schema == StructType.fromDDL(AUDIT_DDL)
+        assert sorted((tuple(r) for r in back.collect()), key=repr) == want
+
+
+def _crash_mid_append(monkeypatch, step, at_crash):
+    """Make ``append_rows`` crash once at ``step``: ``write_table`` leaves
+    the first half of the file at the path it was given, ``rename`` fails
+    before it moves the file. ``at_crash()`` runs just before the raise, so
+    it sees what a killed process would leave behind, before any cleanup.
+    Returns the list of crashed calls."""
+    import pyarrow.parquet as pq
+
+    obj = pq if step == "write_table" else os
+    real, calls = getattr(obj, step), []
+
+    def crash(*args, **kwargs):
+        if calls:
+            return real(*args, **kwargs)
+        calls.append(args)
+        if step == "write_table":
+            real(*args, **kwargs)
+            with open(args[1], "r+b") as fh:
+                fh.truncate(os.path.getsize(args[1]) // 2)
+        at_crash()
+        raise OSError(f"injected crash in {step}")
+
+    monkeypatch.setattr(obj, step, crash)
+    return calls
+
+
+@pytest.mark.parametrize("step", ["write_table", "rename"])
+def test_append_rows_crash_leaves_only_committed_rows(spark, tmp_path, monkeypatch, step):
+    """A crash while append_rows writes its file, or before the file is
+    renamed into place, adds no row: at the moment of the crash and after
+    it, the table reads back with the rows of earlier appends only, and
+    the next append succeeds."""
+    from etl_school_spark.sources.writers import append_rows, read_table
+
+    table = str(tmp_path / "audit")
+
+    def rows():
+        return [sorted((tuple(r) for r in df.collect()), key=repr)
+                for df in (spark.read.parquet(table), read_table(spark, table))]
+
+    append_rows(spark, table, _audit_rows(0), AUDIT_DDL)
+    committed = [sorted(_audit_rows(0), key=repr)] * 2
+    seen = []
+    calls = _crash_mid_append(monkeypatch, step, lambda: seen.append(rows()))
+    with pytest.raises(OSError, match="injected crash"):
+        append_rows(spark, table, _audit_rows(1), AUDIT_DDL)
+    monkeypatch.undo()
+    assert len(calls) == 1  # the crash hit the step named
+    assert seen == [committed]
+    assert rows() == committed
+    append_rows(spark, table, _audit_rows(2), AUDIT_DDL)
+    assert rows() == [sorted(_audit_rows(0) + _audit_rows(2), key=repr)] * 2
+
+
+def test_append_rows_joins_a_spark_written_table(spark, tmp_path):
+    """Files Spark's own writer appended (as append_rows did before it
+    wrote on the driver) and driver-written files read as one table."""
+    from pyspark.sql.types import StructType
+
+    from etl_school_spark.session import local_frame
+    from etl_school_spark.sources.writers import append_rows, read_table
+
+    table = str(tmp_path / "task_history")
+    local_frame(spark, _audit_rows(0), AUDIT_DDL).coalesce(1).write.mode("append").parquet(table)
+    append_rows(spark, table, _audit_rows(1), AUDIT_DDL)
+    local_frame(spark, _audit_rows(2), AUDIT_DDL).coalesce(1).write.mode("append").parquet(table)
+    want = sorted(_audit_rows(0) + _audit_rows(1) + _audit_rows(2), key=repr)
+    for back in (spark.read.parquet(table), read_table(spark, table)):
+        assert back.schema == StructType.fromDDL(AUDIT_DDL)
+        assert sorted((tuple(r) for r in back.collect()), key=repr) == want
+
+
+def test_read_table_takes_the_footer_schema_without_a_job(spark, tmp_path):
+    """On a Spark-written table, read_table gives the schema and rows a
+    bare read gives, but the bare read runs a job to infer the schema."""
+    from etl_school_spark.sources.writers import read_table
+    from tests.jobcount import count_jobs
+
+    table = str(tmp_path / "t")
+    spark.range(0, 50, numPartitions=4).selectExpr("id", "cast(id as string) s").write.parquet(table)
+    with count_jobs(spark) as bare_jobs:
+        bare = spark.read.parquet(table)
+    with count_jobs(spark) as jobs:
+        df = read_table(spark, table)
+    assert (bare_jobs.n, jobs.n) == (1, 0)
+    assert df.schema == bare.schema
+    assert sorted(df.collect()) == sorted(bare.collect())
+
+
+def test_read_table_without_a_spark_schema_reads_as_spark_does(spark, tmp_path):
+    """A table whose footer holds no Spark schema (written by another
+    tool), or one with partition subdirectories, is read by Spark's own
+    inference: same schema and rows as a bare read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_school_spark.sources.writers import read_table
+
+    foreign = str(tmp_path / "foreign")
+    os.makedirs(foreign)
+    pq.write_table(
+        pa.table({"k": pa.array([1, 2, None], pa.int16()), "u": pa.array(["a", None, "c"])}),
+        os.path.join(foreign, "part-0.parquet"),
+    )
+    parted = str(tmp_path / "parted")
+    spark.range(0, 20).selectExpr("id", "id % 3 AS p").write.partitionBy("p").parquet(parted)
+    for table in (foreign, parted):
+        bare, df = spark.read.parquet(table), read_table(spark, table)
+        assert df.schema == bare.schema
+        assert sorted(df.collect(), key=repr) == sorted(bare.collect(), key=repr)
+    assert spark.read.parquet(foreign).schema.simpleString() == "struct<k:smallint,u:string>"
+    assert "p" in read_table(spark, parted).columns
+
+
+def test_merge_upsert_matches_columns_by_name(spark, tmp_path):
+    """Updates whose column order differs from the table's merge by name;
+    the table keeps its own column order."""
+    from etl_school_spark.sources.writers import merge_upsert
+
+    table = str(tmp_path / "keyed")
+    merge_upsert(spark, table, spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], "id long, v string, w double"), "id")
+    updates = spark.createDataFrame([(20.0, 2, "b2"), (30.0, 3, "c")], "w double, id long, v string")
+    assert merge_upsert(spark, table, updates, "id") == (2, 3)
+    back = spark.read.parquet(table)
+    assert back.columns == ["id", "v", "w"]
+    assert sorted(tuple(r) for r in back.collect()) == [(1, "a", 1.0), (2, "b2", 20.0), (3, "c", 30.0)]

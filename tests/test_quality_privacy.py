@@ -38,6 +38,78 @@ def test_dq_metrics_and_alerts(spark, tmp_path):
     assert {r.metric_name for r in alerts.collect()} == {"approved_rate"}
 
 
+def _cc_rules():
+    from etl_school_spark.quality import DqRule
+
+    return [
+        DqRule("non_null_txn_id", F.col("txn_id").isNotNull(), 1.00),
+        DqRule("approved_rate", F.col("approved"), 0.99),  # ~10/11 → breaches
+    ]
+
+
+def test_run_dq_job_count_and_computed_at(spark, tmp_path):
+    """run_dq with a metrics dir runs one job, the scan that observes the
+    suite; the metric rows are appended on the driver. ``computed_at`` is
+    the wall clock in the session time zone."""
+    import datetime
+    from zoneinfo import ZoneInfo
+
+    from etl_school_spark.quality import run_dq
+    from tests.jobcount import count_jobs
+
+    df = _cc(spark, 50)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        with count_jobs(spark) as jobs:
+            m = run_dq(spark, df, _cc_rules(), str(tmp_path / "metrics"))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert jobs.n == 1, f"run_dq: {jobs.n} jobs"
+    now = datetime.datetime.now(ZoneInfo("America/New_York")).replace(tzinfo=None)
+    got = m.collect()
+    assert [r.metric_name for r in got] == ["non_null_txn_id", "approved_rate"]
+    assert all(r.metric_den == 50.0 and abs(now - r.computed_at) < datetime.timedelta(minutes=5) for r in got)
+
+
+def test_dq_alerts_job_count(spark, tmp_path):
+    """Alerts over an already-read metrics table run two jobs, the latest
+    metric's window exchange and its result: the thresholds are a map
+    literal, with no broadcast job."""
+    from etl_school_spark.quality import dq_alerts, run_dq
+    from etl_school_spark.sources.writers import read_table
+    from tests.jobcount import count_jobs
+
+    metrics_dir = str(tmp_path / "metrics")
+    run_dq(spark, _cc(spark, 50), _cc_rules(), metrics_dir)
+    metrics = read_table(spark, metrics_dir)
+    with count_jobs(spark) as jobs:
+        alerts = dq_alerts(spark, metrics, _cc_rules()).collect()
+    assert jobs.n == 2, f"dq_alerts: {jobs.n} jobs"
+    assert [(r.metric_name, r.threshold) for r in alerts] == [("approved_rate", 0.99)]
+
+
+def test_dq_rules_with_duplicate_names_raise(spark, tmp_path):
+    """One rule name per suite: a duplicate would write two metrics of one
+    name, collide as an observed metric and cannot key the threshold map,
+    so every call that takes a suite refuses it."""
+    import pytest
+
+    from etl_school_spark.quality import DqRule, dq_alerts, observed_write, run_dq
+
+    df = _cc(spark, 20)
+    rules = _cc_rules() + [DqRule("approved_rate", F.lit(True), 0.5)]
+    with pytest.raises(ValueError, match="approved_rate"):
+        run_dq(spark, df, rules, str(tmp_path / "metrics"))
+    assert not (tmp_path / "metrics").exists()
+    metrics = run_dq(spark, df, _cc_rules())
+    with pytest.raises(ValueError, match="approved_rate"):
+        dq_alerts(spark, metrics, rules)
+    with pytest.raises(ValueError, match="approved_rate"):
+        observed_write(df, str(tmp_path / "out"), rules)
+    assert not (tmp_path / "out").exists()
+
+
 def test_latest_metrics_picks_newest(spark, tmp_path):
     from etl_school_spark.quality import DqRule, latest_metrics, run_dq
 
